@@ -35,7 +35,7 @@ object SparkEntry {
 
   /** EVERY family's shared in-session corpus build, in dependency order —
     * the one list Bench (timed `_build_*` attribution entries) and
-    * ScalingProbe force before per-query timing, so no roster entry's
+    * the probes (graft.tools.Probe) force before per-query timing, so no roster entry's
     * figure silently absorbs a memo build that belongs to the family
     * (the r12/r13 attribution postmortems: the alphabetically-first
     * consumer of an unwarmed store read 40–200 s for seconds of query

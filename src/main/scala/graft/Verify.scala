@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,17 +11,7 @@ object Verify {
       case Some(p) => { val ps = p.split(','); n => ps.exists(n.startsWith) }
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RAM-backed shuffle scratch when available (see Bench.scratchDir:
-      // the virtual disk stalls identical shuffles 20-100x at random)
-      .config("spark.local.dir",
-        graft.Bench.scratchDir.getOrElse("/tmp"))
-      .getOrCreate()
+    val spark = Bench.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

@@ -77,13 +77,7 @@ object CurationPipeline {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-curation-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session("graft-curation-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     val (counts, fin) = run(spark, sfDir, args.lift(1))
     counts.foreach { case (stage, (d, t)) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Pre-deploy audit CLI: run every registered query against a data
   * directory and print ONE LINE per [[PlanAudit]] finding
   * (`query<TAB>[LEVEL] rule: detail`), errors and warnings alike — the
@@ -14,12 +12,7 @@ import org.apache.spark.sql.SparkSession
 object AuditReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session("graft-audit")
     spark.sparkContext.setLogLevel("ERROR")
     var (errors, warnings, proved) = (0, 0, 0)
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -192,6 +192,33 @@ class BenchContractSpec extends AnyFunSuite {
       s"memoStages entries without a warmer: ${dangling.mkString(", ")}")
   }
 
+  test("rerun: a slow run is re-run once after evict, warm row first") {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    var runs = 0
+    val rows = Bench.rerun("x", 0.0, () => events += "evict") {
+      runs += 1
+      events += s"run$runs"
+      if (runs == 1) Thread.sleep(50) // only the cold run is slow
+    }
+    assert(events == Seq("run1", "evict", "run2"))
+    assert(rows.map(r => (r._1, r._3)) == Seq(("x", true), ("_cold_x", true)))
+    assert(rows(1)._2 >= 0.05, s"cold row is not the first run: $rows")
+  }
+
+  test("rerun: a failing cold run or one under the threshold is one row") {
+    var runs = 0
+    var evicts = 0
+    val failed = Bench.rerun("f", 0.0, () => evicts += 1) {
+      runs += 1
+      throw new IllegalStateException("boom")
+    }
+    assert(runs == 1 && evicts == 0)
+    assert(failed.map(r => (r._1, r._3)) == Seq(("f", false)))
+    val fast = Bench.rerun("g", 1e9, () => evicts += 1) { runs += 1 }
+    assert(runs == 2 && evicts == 0)
+    assert(fast.map(r => (r._1, r._3)) == Seq(("g", true)))
+  }
+
   test("rerunSec stays a cold-JIT filter across scale factors") {
     // calibrated 15 s at sf0.1; linear in sf above that so entries that
     // legitimately cost >15 s at sf1 don't all earn a second full run

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Turn ScalingProbe's SCALE lines into the SCALING.md table body.
+"""Turn `graft.tools.Probe scale`'s SCALE lines into the SCALING.md table body.
 
 Usage: python3 tools/scaling_report.py /tmp/scaling_probe.log [copies=10]
 
