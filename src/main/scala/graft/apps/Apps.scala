@@ -2,6 +2,7 @@ package graft.apps
 
 import graft.core.{KV, MrApp}
 import java.nio.charset.StandardCharsets
+import scala.collection.immutable
 
 /** The reference's 8 shipped applications (SURVEY §2b), re-expressed as
   * [[MrApp]] instances. Semantics are matched behaviorally against the Go
@@ -15,7 +16,7 @@ object Apps {
     * `unicode.IsLetter` (both are Unicode general-category L*).
     */
   def letterTokens(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    val out = Array.newBuilder[String]
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i < s.length) {
@@ -25,7 +26,7 @@ object Apps {
       i += Character.charCount(cp)
     }
     if (sb.length > 0) out += sb.toString
-    out.toSeq
+    immutable.ArraySeq.unsafeWrapArray(out.result())
   }
 
   /** Go `len(string)` is the UTF-8 byte length, not the char count. */

@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.{immutable, mutable}
 
 /** Spark-native lowering of the reference's two-phase map/shuffle/reduce
   * dataflow (SURVEY §2a). The reference's coordinator/worker/RPC machinery
@@ -9,27 +10,37 @@ import org.apache.spark.sql.functions._
   * DAGScheduler provides the task tables, stage barrier, straggler retry
   * and exactly-once output commit natively.
   *
-  * Pipeline (one Spark action):
+  * Pipeline (one Spark action, one exchange, two stages):
   * {{{
   *   wholetext read                      // src/mr/worker.go:221-232 (one map task per file)
-  *     -> flatMap(app.map)               // src/mr/worker.go:232
+  *     -> flatMap(app.map, group by key) // src/mr/worker.go:232-237: one (key, values) row
+  *                                       //   per distinct key of each file
   *     -> repartition(nReduce, key)      // ihash(key) % nReduce, src/mr/worker.go:235,273-277
   *     -> sortWithinPartitions(key)      // sort.Sort(ByKey), src/mr/worker.go:181
   *     -> adjacent-group fold(app.reduce)// src/mr/worker.go:197-212
-  *     -> "key value" text sink          // fmt.Fprintf("%v %v\n"), src/mr/worker.go:209
+  *     -> "key value" text sink          // one part file per non-empty reduce
+  *                                       //   partition, like mr-out-X (worker.go:209-216)
   * }}}
   *
   * Scale notes (100 TB design):
   *  - This generic path intentionally has NO map-side combine, matching the
-  *    reference (src/mrapps/wc.go:27-31 ships one "1" per occurrence). For
-  *    production queries use the native DataFrame formulations in
+  *    reference (src/mrapps/wc.go:27-31 ships one "1" per occurrence): every
+  *    value the map emits reaches reducef. A map call's values cross the
+  *    shuffle grouped under their key — the reference's map task likewise
+  *    holds one file's output in memory before bucketing it — so the
+  *    shuffle carries one row per (file, key), not one per value.
+  *    For production queries use the native DataFrame formulations in
   *    [[graft.SparkEntry]], which get partial aggregation, whole-stage
   *    codegen and pushdown from Catalyst.
+  *  - The grouping buffer is per map call, not per partition, and its input
+  *    (the map's returned `Seq[KV]`) is already fully materialized by the
+  *    [[MrApp]] contract, so grouping does not raise the memory bound.
   *  - The per-key value list is materialized only per group inside a
   *    streaming iterator scan of each sorted partition — Spark's
-  *    UnsafeExternalSorter spills the sort, so a partition larger than
-  *    executor memory still completes; a single giant key is the only
-  *    unbounded case, exactly as in the reference.
+  *    UnsafeExternalSorter spills the sort by row (a row holds at most one
+  *    file's values for one key), so a partition larger than executor
+  *    memory still completes; a single giant key is the only unbounded
+  *    case, exactly as in the reference.
   *  - Spark's shuffle hash (Murmur3 via HashPartitioning) replaces the
   *    reference's FNV-1a. Only key co-location is observable in the final
   *    output (the reference test sorts across all mr-out-* files,
@@ -50,35 +61,44 @@ final case class MapReduceJob(app: MrApp, nReduce: Int = 10) {
       .as[(String, String)]
   }
 
-  /** Map phase: flatMap the user mapf over whole files. */
-  def mapPhase(files: Dataset[(String, String)]): Dataset[KV] = {
+  /** Map phase: call the user mapf once per whole file and group that
+    * call's output by key in first-seen order — one `(key, values)` row per
+    * distinct key of the file; no value is combined or dropped.
+    */
+  def mapPhase(files: Dataset[(String, String)]): Dataset[(String, Array[String])] = {
     import files.sparkSession.implicits._
     val f = app
-    files.flatMap { case (file, contents) => f.map(file, contents) }
+    files.flatMap { case (file, contents) =>
+      val groups = mutable.LinkedHashMap.empty[String, mutable.ArrayBuilder[String]]
+      f.map(file, contents).foreach { kv =>
+        groups.getOrElseUpdate(kv.key, Array.newBuilder[String]) += kv.value
+      }
+      groups.iterator.map { case (k, vs) => (k, vs.result()) }
+    }
   }
 
   /** Shuffle + reduce phase: co-locate by key, sort within partitions, scan
-    * each sorted partition grouping adjacent equal keys and calling the
-    * user reducef with the materialized value list — a line-for-line
-    * semantic match of the reference's reduce loop
+    * each sorted partition concatenating adjacent rows' values and calling
+    * the user reducef once per key with the materialized value list — a
+    * line-for-line semantic match of the reference's reduce loop
     * (src/mr/worker.go:181-212) with Spark's shuffle replacing the
     * mr-M-R intermediate files.
     */
-  def reducePhase(mapped: Dataset[KV]): Dataset[KV] = {
+  def reducePhase(mapped: Dataset[(String, Array[String])]): Dataset[KV] = {
     import mapped.sparkSession.implicits._
     val f = app
     mapped
-      .repartition(nReduce, col("key"))
-      .sortWithinPartitions("key")
+      .repartition(nReduce, col("_1"))
+      .sortWithinPartitions("_1")
       .mapPartitions { it =>
         new Iterator[KV] {
           private val buf = it.buffered
           def hasNext: Boolean = buf.hasNext
           def next(): KV = {
-            val k = buf.head.key
-            val values = scala.collection.mutable.ArrayBuffer.empty[String]
-            while (buf.hasNext && buf.head.key == k) values += buf.next().value
-            KV(k, f.reduce(k, values.toSeq))
+            val k = buf.head._1
+            val values = Array.newBuilder[String]
+            while (buf.hasNext && buf.head._1 == k) values ++= buf.next()._2
+            KV(k, f.reduce(k, immutable.ArraySeq.unsafeWrapArray(values.result())))
           }
         }
       }
@@ -94,7 +114,9 @@ final case class MapReduceJob(app: MrApp, nReduce: Int = 10) {
     reducePhase(mapPhase(spark.createDataset(files)))
   }
 
-  /** Text sink: one `"key value"` line per record, `nReduce` output files.
+  /** Text sink: one `"key value"` line per record, written by the reduce
+    * stage itself — up to `nReduce` part files, one per non-empty reduce
+    * partition, each in key order (the reference's mr-out-X).
     * Output visibility relies on Spark's FileOutputCommitter (task-attempt
     * temp dir + rename) — the same atomic-rename, first-writer-wins
     * protocol the reference hand-rolls (src/mr/worker.go:183-216).
@@ -102,7 +124,6 @@ final case class MapReduceJob(app: MrApp, nReduce: Int = 10) {
   def writeOutput(result: Dataset[KV], outDir: String): Unit =
     result
       .select(concat_ws(" ", col("key"), col("value")).as("value"))
-      .repartition(nReduce)
       .write.mode("overwrite").text(outDir)
 }
 

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 /** The reference's applications (SURVEY §2b) re-expressed as native
   * DataFrame queries over the documents table — the scalable formulations:
   * Catalyst gets partial aggregation, codegen and pushdown here, unlike the
-  * parity-exact generic [[graft.core.MapReduceJob]] path (which ships every
-  * ("word","1") pair to the reducer exactly like the reference,
-  * src/mrapps/wc.go:27-31).
+  * parity-exact generic [[graft.core.MapReduceJob]] path (which combines
+  * nothing: every ("word","1") value reaches the reducer exactly like the
+  * reference, src/mrapps/wc.go:27-31, shuffled as one (word, values) row per
+  * file).
   *
   * Tokenizer: Java regex `[^\p{L}]+` ≡ Go FieldsFunc(!unicode.IsLetter)
   * (property-tested in TokenizerProp); empty tokens dropped like Go
