@@ -1,6 +1,7 @@
 package graft.apps
 
 import graft.core.{KV, MrApp}
+import graft.functions.TextKernels
 import java.nio.charset.StandardCharsets
 import scala.collection.immutable
 
@@ -11,23 +12,12 @@ import scala.collection.immutable
 object Apps {
 
   /** Tokenizer parity with Go `strings.FieldsFunc(s, !unicode.IsLetter)`
-    * (src/mrapps/wc.go:21-24): split on maximal runs of non-letters, drop
-    * empty tokens. `Character.isLetter` on code points mirrors
-    * `unicode.IsLetter` (both are Unicode general-category L*).
+    * (src/mrapps/wc.go:21-24): the one letter-token loop
+    * ([[graft.functions.TextKernels.letterTokens]]) the DataFrame
+    * tokenizer also runs, wrapped without a copy.
     */
-  def letterTokens(s: String): Seq[String] = {
-    val out = Array.newBuilder[String]
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isLetter(cp)) sb.appendCodePoint(cp)
-      else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      i += Character.charCount(cp)
-    }
-    if (sb.length > 0) out += sb.toString
-    immutable.ArraySeq.unsafeWrapArray(out.result())
-  }
+  def letterTokens(s: String): Seq[String] =
+    immutable.ArraySeq.unsafeWrapArray(TextKernels.letterTokens(s))
 
   /** Go `len(string)` is the UTF-8 byte length, not the char count. */
   def utf8Len(s: String): Int = s.getBytes(StandardCharsets.UTF_8).length

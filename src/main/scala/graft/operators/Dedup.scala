@@ -1,8 +1,10 @@
 package graft.operators
 
+import graft.functions.{MinHash, MinHashSignature}
+import graft.functions.MinHash.{K, P, R}
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline: exact (hash
@@ -19,18 +21,14 @@ import org.apache.spark.sql.functions._
   *  - Jaccard join joins on shared shingles (never a cross join) — skewed
   *    ultra-common shingles are the known hazard; MinHash-LSH is the scale
   *    path, bounding candidate pairs by band collisions;
-  *  - MinHash: per-doc signatures via one groupBy(doc, perm) with map-side
-  *    partial min, bands via one more groupBy — shuffle volume is
-  *    O(docs × K), independent of document length;
+  *  - MinHash: per-doc signatures by a codegen'd kernel in the scan stage
+  *    (no shuffle), bands via one groupBy — shuffle volume is O(docs × K),
+  *    independent of document length;
   *  - SimHash pairs use the pigeonhole banded join (10 chunks of 6 bits
   *    for hamming ≤ 9): candidates only for pairs sharing a chunk, then the
   *    exact hamming filter — never the O(n²) loop the oracle can afford.
   */
 object Dedup {
-
-  private val P = 2147483647L // 2^31 - 1, prime modulus for minhash perms
-  private val K = 32 // minhash permutations
-  private val R = 4 // rows per band -> 8 bands
 
   /** Tokens split on non-letter runs (reference tokenizer semantics). */
   private def toks(df: DataFrame): DataFrame =
@@ -520,11 +518,9 @@ object Dedup {
       .orderBy("source")
   }
 
-  /** MinHash signatures, wide form: one row per doc with columns m1..mK.
-    * K min-aggregates over the shingle hashes in a single groupBy — no
-    * K-fold row explosion before the shuffle (the first cut cross-joined a
-    * perm table and was 7x slower at sf0.1). Formulas (and therefore
-    * results) are identical to the oracle SQL.
+  /** MinHash signatures, wide form: one row per doc with columns m1..mK,
+    * memoized per corpus. Formulas (and therefore results) are identical
+    * to the oracle SQL.
     */
   def minhashSignatures(docs: DataFrame): DataFrame =
     memoized("sig", docs) {
@@ -542,49 +538,36 @@ object Dedup {
     val h = shingles(docs)
       .select(col("doc_id"), (portableHash60(col("s")) % P).as("h0"))
     val aggs = (1 to K).map { i =>
-      val a = (i * 2654435761L) % P
-      val b = (i * 982451653L) % P
-      min((col("h0") * a + b) % P).as(s"m$i")
+      min((col("h0") * MinHash.a(i) + MinHash.b(i)) % P).as(s"m$i")
     }
     h.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
   /** Row-local MinHash signatures — value-identical to
-    * [[minhashSignatures]] (same shingles, same permutations, same
-    * modulus) but computed entirely inside the scan stage: the per-doc
-    * min runs as an array HOF over the row's own shingle array instead of
-    * explode + groupBy. Two uses: (a) an unbounded STREAM can sign
+    * [[groupBySignatures]] (same shingles, same permutations, same
+    * modulus) but computed entirely inside the scan stage by the codegen'd
+    * [[graft.functions.MinHashSignature]] kernel: one loop per document
+    * over its token array builds each word 3-gram, hashes it and folds all
+    * K permutations into running mins (no explode, no groupBy, no
+    * interpreted lambda). Two uses: (a) an unbounded STREAM can sign
     * documents at ingest with no state store (a streaming groupBy would
     * need one); (b) zero shuffle — the signature of a row never leaves
-    * its partition until a consumer joins on it. The batch stack keeps
-    * the groupBy form for its memoized-store integration; both forms
-    * hash-agree (pinned in DedupSpec).
+    * its partition until a consumer joins on it. Documents with fewer than
+    * 3 tokens have no shingle and drop out, as in [[shingles]].
     */
-  def rowLocalSignatures(docs: DataFrame): DataFrame = {
-    val sh = when(size(col("w")) >= 3, // total expression: see gramSets
-      array_distinct(transform(
-        sequence(lit(0), size(col("w")) - 3),
-        i => concat_ws(" ",
-          element_at(col("w"), i + 1),
-          element_at(col("w"), i + 2),
-          element_at(col("w"), i + 3)))))
-      .otherwise(lit(Array.empty[String]))
-    val sigCols = (1 to K).map { i =>
-      val a = (i * 2654435761L) % P
-      val b = (i * 982451653L) % P
-      array_min(transform(col("h0s"), h => (h * a + b) % P)).as(s"m$i")
-    }
-    // h0s in its OWN projection: the md5-based shingle hash runs once per
-    // shingle, and the K=32 permutation scans reference the hashed array.
-    // CollapseProject's cost guard keeps a non-cheap alias referenced 32×
-    // materialized instead of inlining the md5 32-fold.
-    toks(docs).filter(size(col("w")) >= 3).withColumn("sh", sh)
-      .withColumn("h0s", transform(col("sh"), s => portableHash60(s) % P))
-      .select(col("doc_id") +: sigCols: _*)
-  }
+  def rowLocalSignatures(docs: DataFrame): DataFrame =
+    // `sig` in its OWN projection, read 32 times by index: CollapseProject
+    // keeps a non-cheap alias referenced more than once materialized, so
+    // the kernel runs once per document, not once per m_i
+    toks(docs).filter(size(col("w")) >= 3)
+      .withColumn("sig",
+        GraftShims.column(MinHashSignature(GraftShims.expression(col("w")))))
+      .select(col("doc_id") +:
+        (0 until K).map(i => col("sig").getItem(i).as(s"m${i + 1}")): _*)
 
   /** (doc_id, band, bkey) rows from [[rowLocalSignatures]] — the
-    * stream-safe band projection (stateless: HOFs + one explode).
+    * stream-safe band projection (stateless: the signature kernel + one
+    * explode).
     */
   def rowLocalBands(docs: DataFrame): DataFrame =
     bandsOf(rowLocalSignatures(docs))

@@ -1,15 +1,22 @@
 package graft.operators
 
+import graft.functions.LetterTokens
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline: token statistics,
   * quality scoring, language-ID heuristic, document fingerprinting. All are
-  * pure column expressions (whole-stage codegen, no UDFs) over a `text`
-  * column, so they scale embarrassingly: no shuffle at all — every score is
-  * computed in the scan stage.
+  * column expressions over a `text` column (no UDFs), so they scale
+  * embarrassingly: no shuffle at all — every score is computed in the scan
+  * stage. Not all of it is compiled, though:
+  *  - the tokenizer [[tokens]] (and Dedup's MinHash signature) are
+  *    codegen'd kernels in `graft.functions` — one generated loop per row;
+  *  - the per-token statistics built from `filter`, `transform` and
+  *    `aggregate` lambdas are higher-order functions, which Spark 4.1.2
+  *    evaluates interpreted (`CodegenFallback`): one lambda call per array
+  *    element.
   *
   * No reference counterpart (SURVEY §2c: the reference's only text
   * operation is the wc/indexer tokenizer); these are the north-star
@@ -19,10 +26,12 @@ object TextAnalysis {
 
   /** Tokens of `c` split on non-letter runs, empties dropped — same
     * semantics as the reference tokenizer (Go FieldsFunc(!IsLetter),
-    * src/mrapps/wc.go:21-24).
+    * src/mrapps/wc.go:21-24) and as `filter(split(c, "[^\\p{L}]+"),
+    * x => length(x) > 0)`, as the codegen'd [[graft.functions.LetterTokens]]
+    * kernel (the loop the MrApp tokenizer runs too).
     */
   def tokens(c: Column): Column =
-    filter(split(c, "[^\\p{L}]+"), x => length(x) > 0)
+    GraftShims.column(LetterTokens(GraftShims.expression(c)))
 
   /** Per-document token statistics. */
   def tokenStats(docs: DataFrame): DataFrame =

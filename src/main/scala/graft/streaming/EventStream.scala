@@ -1142,7 +1142,7 @@ object EventStream {
       s.read.parquet(out).orderBy("event_type", "bucket")
     }),
     // Streaming near-dedup at ingest: new documents stream in, each is
-    // MinHash-signed ROW-LOCALLY (Dedup.rowLocalBands — scan-stage HOFs,
+    // MinHash-signed ROW-LOCALLY (Dedup.rowLocalBands — scan-stage kernel,
     // no state store), and its LSH band keys probe the HISTORICAL
     // signature store (static side, built once per snapshot) in a
     // stream-static join. A collision flags (historical_id, new_id) at

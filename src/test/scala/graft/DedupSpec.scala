@@ -585,6 +585,37 @@ class DedupSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), plan)
   }
 
+  test("rowLocalSignatures == groupBySignatures on hand-made edge documents") {
+    import spark.implicits._
+    val rows = Seq(
+      (1L, "alpha beta gamma"),                  // exactly 3 tokens
+      (2L, "a b c a b c"),                       // a repeated shingle
+      (3L, "Ärger über Straße, 中文 λόγος Жук 𝒜x"), // non-ASCII tokens
+      (4L, "only two"),                          // < 3 tokens: drops out
+      (5L, "12, 34 -- 56"))                      // no tokens: drops out
+    // a local frame (evaluated interpreted, folded at optimization) and an
+    // RDD-backed one (evaluated in generated code)
+    val local = rows.toDF("doc_id", "text")
+    val distributed = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2))
+      .toDF("doc_id", "text")
+    for (d <- Seq(local, distributed)) {
+      val a = Dedup.rowLocalSignatures(d).orderBy("doc_id").collect().map(_.toSeq).toSeq
+      val b = Dedup.groupBySignatures(d).orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(a.map(_.head) === Seq(1L, 2L, 3L))
+      assert(a.forall(_.length === 33))
+      assert(a === b)
+    }
+  }
+
+  test("rowLocalSignatures plan: one kernel evaluation, no exchange, no lambda") {
+    val docs = graft.tables.Tables.load(spark, TestSpark.sf0001, "documents")
+    val plan = Dedup.rowLocalSignatures(docs).queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(!plan.contains("lambdafunction"), plan)
+    // read 32 times by index, evaluated once: not inlined by CollapseProject
+    assert("minhash_signature\\(".r.findAllMatchIn(plan).size === 1, plan)
+  }
+
   test("paragraphDedup: globally-first occurrence survives, cleaned text rebuilds") {
     import spark.implicits._
     // chunkTokens=3; doc 1 owns chunk "a b c"; doc 2 repeats it twice (one
