@@ -10,9 +10,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** THE bench-shaped session (SPARK_GRAFT_CPUS cores, default every
-    * available processor; shuffle=cpus, AQE, UTC, no UI) — one definition,
-    * so Verify, the probes (graft.tools.Probe) and the audit run under
-    * exactly the configuration the official bench runs.
+    * available processor; shuffle=cpus, AQE, UTC, no UI, [[CodegenConf]])
+    * — one definition, so Verify, the probes (graft.tools.Probe), the
+    * audit and `CurationPipeline.main` run under exactly the configuration
+    * the official bench runs.
     */
   def session(appName: String = "graft-bench"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -24,9 +25,42 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(CodegenConf)
     scratchDir.foreach(d => b.config("spark.local.dir", d))
     b.getOrCreate()
   }
+
+  /** Generated classes the codegen cache holds. Static: Spark reads it
+    * once, from the session active when `CodeGenerator` is first used in
+    * the JVM, so only the builder of the JVM's first session sets it.
+    * Sized on measured working sets, the classes a pass compiles when none
+    * of them is cached (traced benchmark runs, seed 7): a curation pass
+    * 136, a roster pass 64. Spark's default of 100 is below the curation
+    * pass alone, so each pass evicted its own classes. One `Bench.main`
+    * run at sf0.001 (386 entries) needs 4239 distinct classes, most of
+    * them for one entry only; under this bound it compiles 4640 (9% more).
+    */
+  val CodegenCacheEntries = 1000
+
+  /** Codegen settings of every session the engine builds (this one and
+    * the test suite's): compile each generated class once per JVM, not
+    * once per session.
+    *  - `CodeGenerator`'s cache is keyed on (context class loader, code).
+    *    With artifact isolation on (Spark 4's default) every
+    *    `newSession()` and every stream's cloned session gets its own
+    *    artifact state, so its tasks run under their own class loader and
+    *    every class misses the cache. Isolation only separates artifacts
+    *    (jars, files) added to a session; nothing in the engine adds any
+    *    (no `addArtifact`, no `addJar`, no Spark Connect), so turning it
+    *    off changes no result.
+    *  - [[CodegenCacheEntries]] sizes the cache to the working set above,
+    *    so a pass no longer evicts its own classes.
+    * Both together took a traced curation pass from 136 compiled classes
+    * (1.3 s of codegen) to 8, and a roster pass from 64 to 0.
+    */
+  val CodegenConf: Map[String, Any] = Map(
+    "spark.sql.artifact.isolation.enabled" -> false,
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries)
 
   /** Shuffle/spill scratch root: RAM-backed (/dev/shm) when available.
     * The sf1 probe A/B-measured the default /tmp (virtual-disk-backed)

@@ -1,8 +1,10 @@
 package graft.tools
 
 import graft.{Bench, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.streaming.OutputMode
 
 /** The measuring main: one entry point for per-entry probes, on the literal
@@ -18,7 +20,10 @@ import org.apache.spark.sql.streaming.OutputMode
   * (SparkEntry.queries) for all modes but `build`, which selects memo
   * warmers (SparkEntry.memoWarmers). A selector that matches nothing exits
   * 2 before any session starts. Modes:
-  *  - `time`: three warm `[time] <name> runN <s> s` lines per entry;
+  *  - `time`: three warm `[time] <name> runN <s> s classes=<n> codegen=<s> s`
+  *    lines per entry: wall time, and the classes codegen compiled and its
+  *    compile seconds during the run, so a run that recompiles what an
+  *    earlier run compiled shows as classes > 0;
   *  - `build`: each selected memo build forced once, timed, on the fresh
   *    memo a new JVM has (`[build]` lines), in dependency order;
   *  - `jobs`: per-JOB breakdown of one warm run (`[job]` lines: wall
@@ -101,8 +106,15 @@ object Probe {
     timed(SparkEntry.queries(name)(spark, dir).count())._1
 
   def time(spark: SparkSession, dir: String, names: Seq[String]): Unit =
-    for (name <- names; i <- 1 to TimeReps)
-      println(f"[time] $name run$i ${count(spark, dir, name)}%.2f s")
+    for (name <- names; i <- 1 to TimeReps) {
+      // global counters: a compile on an executor thread counts as well
+      val (n0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        CodeGenerator.compileTime)
+      val secs = count(spark, dir, name)
+      val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+      val compileSecs = (CodeGenerator.compileTime - ns0) / 1e9
+      println(f"[time] $name run$i $secs%.2f s classes=$classes codegen=$compileSecs%.2f s")
+    }
 
   def build(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
     val warmers = SparkEntry.memoWarmers.toMap

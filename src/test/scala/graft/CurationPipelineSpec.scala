@@ -3,12 +3,15 @@ package graft
 import graft.examples.CurationPipeline
 import graft.operators.TextAnalysis
 import graft.tables.Tables
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The composed curation pipeline: every stage is an individually
   * hash-checked operator, so this spec pins only the PLUMBING — monotone
-  * stage counts, gate consistency, split disjointness, packing coverage.
+  * stage counts, gate consistency, split disjointness, packing coverage —
+  * and that a repeated pass reuses the classes codegen compiled for it.
   */
 class CurationPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -83,5 +86,45 @@ class CurationPipelineSpec extends AnyFunSuite {
       .orderBy("doc_id").collect().map(_.toString).sorted
     assert(scn === idx)
     assert(idx.nonEmpty, "corpus phrase should match somewhere")
+  }
+
+  /** Classes codegen compiled while `f` ran (cache misses, JVM-wide). */
+  private def compiled(f: => Any): Long = {
+    val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+  }
+
+  test("a repeated pass compiles at most a quarter of a cold pass's classes") {
+    // A session with artifact isolation on runs its tasks under a class
+    // loader of its own, and the codegen cache is keyed on the loader: all
+    // of its classes miss, so its count is the pass's cold count. Run
+    // between the two measured passes, it also puts a pass's worth of other
+    // classes through the cache, as other work does between two runs of a
+    // job. The engine's sessions have isolation off (Bench.CodegenConf).
+    def isolated() = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.artifact.isolation.enabled", "true")
+      s
+    }
+    val out = TestSpark.tempDir("curation-codegen").toString
+    val passes = Seq[(String, () => SparkSession, SparkSession => Any)](
+      // as the benchmark runs it: a fresh session per pass, with the write
+      ("CurationPipeline.run in a new session", () => spark.newSession(),
+        s => CurationPipeline.run(s, TestSpark.sf0001, Some(out))._2.collect()),
+      // every query of a stream runs in its own clone of the session
+      ("st_time_window on one session", () => spark,
+        s => SparkEntry.queries("st_time_window")(s, TestSpark.sf0001).count()))
+    val counts = for ((what, session, pass) <- passes) yield {
+      val first = compiled(pass(session()))
+      val cold = compiled(pass(isolated()))
+      val second = compiled(pass(session()))
+      info(s"$what: $first classes compiled, $cold cold, then $second")
+      (what, cold, second)
+    }
+    val recompiling = counts.filter { case (_, cold, second) => second * 4 > cold }
+    assert(recompiling.isEmpty, recompiling.map { case (what, cold, second) =>
+      s"$what: the second pass compiled $second classes, a cold pass $cold"
+    }.mkString("; "))
   }
 }

@@ -4,7 +4,7 @@ import graft.tools.Probe
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The measuring main's shared pieces: selector resolution (before any
-  * session exists), the `plan` mode's committed evidence format, and the
+  * session exists), the `time` and `plan` modes' output formats, and the
   * `SCALE` row format tools/scaling_report.py parses.
   */
 class ProbeSpec extends AnyFunSuite {
@@ -29,6 +29,20 @@ class ProbeSpec extends AnyFunSuite {
     assert(Probe.parse(Seq("time", "q01_", "d", "x")).isLeft)
     assert(Probe.parse(Seq("nope", "q01_", "d")).isLeft)
     assert(Probe.parse(Seq("floor", "d")).isRight)
+  }
+
+  test("time mode reports each run's compiled classes; run 2 compiles no more than run 1") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Probe.time(TestSpark.spark, TestSpark.sf0001,
+      Seq("q01_pricing_summary")))
+    val line = """\[time\] (\S+) run(\d+) (\d+\.\d\d) s classes=(\d+) codegen=(\d+\.\d\d) s""".r
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    val runs = lines.collect { case line(name, i, _, classes, _) =>
+      (name, i.toInt, classes.toLong) }
+    assert(runs.size == lines.size, s"unparsed lines in: $lines")
+    assert(runs.map(r => (r._1, r._2)) ==
+      (1 to Probe.TimeReps).map(("q01_pricing_summary", _)))
+    assert(runs(1)._3 <= runs(0)._3, lines.mkString("\n"))
   }
 
   test("plan mode writes <out>/<name>.txt with the formatted physical plan") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
   * with task maxFailures 2, so fault-injection tests can exercise Spark's
   * task retry (the engine's replacement for the reference's 10 s straggler
   * preemption, src/mr/rpc.go:79-98) while normal tests are unaffected.
+  * Codegen runs under the bench session's settings (Bench.CodegenConf).
   */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -16,6 +17,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", tempDir("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      .config(graft.Bench.CodegenConf)
       // RAM-backed shuffle scratch when available (see Bench.scratchDir)
       .config("spark.local.dir",
         graft.Bench.scratchDir.getOrElse("/tmp"))
