@@ -85,6 +85,21 @@ object EditDist {
     }
     d((la + 1) * w + lb + 1)
   }
+
+  /** Unrestricted Damerau–Levenshtein distance of two string columns as a
+    * native codegen'd expression (bit-identical to DuckDB's
+    * `damerau_levenshtein`).
+    */
+  def damerauLevenshtein(a: Column, b: Column): Column =
+    GraftShims.column(
+      DamerauLevenshtein(GraftShims.expression(a), GraftShims.expression(b)))
+
+  /** Jaro–Winkler similarity of two string columns as a native codegen'd
+    * expression (bit-identical to DuckDB's `jaro_winkler_similarity`).
+    */
+  def jaroWinkler(a: Column, b: Column): Column =
+    GraftShims.column(
+      JaroWinkler(GraftShims.expression(a), GraftShims.expression(b)))
 }
 
 /** Jaro–Winkler similarity, bit-identical to DuckDB's
@@ -191,21 +206,4 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DamerauLevenshtein =
     copy(left = newLeft, right = newRight)
-}
-
-object editdist {
-  /** Unrestricted Damerau–Levenshtein distance of two string columns as a
-    * native codegen'd expression (bit-identical to DuckDB's
-    * `damerau_levenshtein`).
-    */
-  def damerauLevenshtein(a: Column, b: Column): Column =
-    GraftShims.column(
-      DamerauLevenshtein(GraftShims.expression(a), GraftShims.expression(b)))
-
-  /** Jaro–Winkler similarity of two string columns as a native codegen'd
-    * expression (bit-identical to DuckDB's `jaro_winkler_similarity`).
-    */
-  def jaroWinkler(a: Column, b: Column): Column =
-    GraftShims.column(
-      JaroWinkler(GraftShims.expression(a), GraftShims.expression(b)))
 }

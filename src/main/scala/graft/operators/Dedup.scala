@@ -4,7 +4,7 @@ import graft.functions.{MinHash, MinHashSignature}
 import graft.functions.MinHash.{K, P, R}
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline: exact (hash
@@ -373,7 +373,7 @@ object Dedup {
   }
 
   def damerauPairs(docs: DataFrame, window: Int = 2): DataFrame = {
-    import graft.functions.editdist.damerauLevenshtein
+    import graft.functions.EditDist.damerauLevenshtein
     snmCandidatePairs(docs, window)
       .select(col("a_id"), col("b_id"),
         levenshtein(col("ta"), col("tb")).as("lev_dist"),
@@ -395,7 +395,7 @@ object Dedup {
     * each probe is O(n·m) on the two texts like every verify here.
     */
   def jaroWinklerPairs(docs: DataFrame, window: Int = 2): DataFrame = {
-    import graft.functions.editdist.jaroWinkler
+    import graft.functions.EditDist.jaroWinkler
     snmCandidatePairs(docs, window)
       .select(col("a_id"), col("b_id"),
         jaroWinkler(col("ta"), col("tb")).as("jw_sim"),

@@ -1307,10 +1307,8 @@ object Multimodal {
       "mm_clipdiff" -> ((s, d) =>
         { clipDiffTable(Tables.load(s, d, "documents")).count(); () }))
 
-  private def decoded(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  private def decoded(s: SparkSession, d: String): DataFrame =
     decodeHeaders(synthesizeMedia(Tables.load(s, d, "documents"))).toDF()
-  }
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm_meta" -> ((s, d) =>
@@ -1320,11 +1318,9 @@ object Multimodal {
       sampleFrames(audioFrames(decoded(s, d))).orderBy("doc_id", "frame_idx")),
     "mm_resize" -> ((s, d) =>
       resizePlan(decoded(s, d).filter(col("width").isNotNull)).orderBy("doc_id")),
-    "mm_audio_stats" -> ((s, d) => {
-      import s.implicits._
+    "mm_audio_stats" -> ((s, d) =>
       audioSampleStats(synthesizeMedia(Tables.load(s, d, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
+        .toDF().orderBy("doc_id")),
     "mm_phash" -> ((s, d) =>
       phash(Tables.load(s, d, "documents")).orderBy("doc_id")),
     "mm_dhash" -> ((s, d) =>
@@ -1344,21 +1340,15 @@ object Multimodal {
       motionStats(Tables.load(s, d, "documents")).orderBy("doc_id")),
     "mm_keyframes" -> ((s, d) =>
       keyFrames(Tables.load(s, d, "documents")).orderBy("doc_id", "t")),
-    "mm_audio_autocorr" -> ((s, d) => {
-      import s.implicits._
+    "mm_audio_autocorr" -> ((s, d) =>
       audioAutocorr(synthesizeMedia(Tables.load(s, d, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
-    "mm_silence" -> ((s, d) => {
-      import s.implicits._
+        .toDF().orderBy("doc_id")),
+    "mm_silence" -> ((s, d) =>
       audioSilence(synthesizeMedia(Tables.load(s, d, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
-    "mm_zcr" -> ((s, d) => {
-      import s.implicits._
+        .toDF().orderBy("doc_id")),
+    "mm_zcr" -> ((s, d) =>
       audioZcr(synthesizeMedia(Tables.load(s, d, "documents")))
-        .toDF().orderBy("doc_id")
-    }),
+        .toDF().orderBy("doc_id")),
   )
 
   /** The phash pixel-recipe replay as oracle CTEs ending in

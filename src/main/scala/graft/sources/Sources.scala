@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -464,9 +464,8 @@ object Sources {
       .write.format("graft-bands").mode("append").save(out)
     val sdf = spark.readStream.format("graft-bands").load(out)
       .filter(col("band").isin(2, 5))
-    graft.streaming.EventStream.runToMemory(sdf, "src_dsv2r_sink",
-      org.apache.spark.sql.streaming.OutputMode.Append)
-    summarizeBands(spark.table("src_dsv2r_sink"))
+    summarizeBands(graft.streaming.EventStream.drain(sdf,
+      org.apache.spark.sql.streaming.OutputMode.Append))
   }
 
   /** The SQL half of the connector gate: the band store is created and

@@ -56,7 +56,7 @@ class EmptyInputSpec extends AnyFunSuite {
   }
 
   test("sixth-session operators handle an empty corpus") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     // native sessionize: empty in, empty out, session_id in the schema
     val noEvents = Tables.events(spark, TestSpark.sf0001).filter(lit(false))
       .select("user_id", "event_id", "ts_ns")

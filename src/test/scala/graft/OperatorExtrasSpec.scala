@@ -608,7 +608,7 @@ class OperatorExtrasSpec extends AnyFunSuite {
       assert(s >= 0.0 && s <= 1.0)
     }
     val viaCol = spark.range(1).select(
-      graft.functions.editdist.jaroWinkler(
+      graft.functions.EditDist.jaroWinkler(
         lit("DIXON"), lit("DICKSONX"))).head().getDouble(0)
     assert(viaCol === 0.8133333333333332)
   }

@@ -232,7 +232,6 @@ class SourcesSpec extends AnyFunSuite {
 
   test("graft-bands DSv2: band delete is metadata-only and versioned") {
     import graft.sources.dsv2.{BandStoreSource, BandStore}
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.apache.spark.sql.sources.{Filter, GreaterThan, In}
     val out = TestSpark.tempDir("graft-dsv2-delete").toString
     bandsFrame().write.format("graft-bands").mode("overwrite").save(out)
@@ -341,7 +340,6 @@ class SourcesSpec extends AnyFunSuite {
     // end to end: joining a SELECTIVE band dimension must inject a
     // runtime group filter into the scan (file pruning with no user
     // band predicate)
-    import spark.implicits._
     // NOT a local Seq: ConvertToLocalRelation would fold the selective
     // filter into the LocalRelation and DPP sees no filter to reuse
     val dim = spark.range(0, 8).select(col("id").cast("int").as("b"),

@@ -3,7 +3,7 @@ package graft
 import graft.streaming.EventStream
 import graft.queries.Relational
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming/batch parity: the streaming operators must agree with their
@@ -15,9 +15,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming windowed counts == batch q17_time_window") {
     val stream = EventStream.readEvents(spark, dir)
-    EventStream.runToMemory(
-      EventStream.windowedCounts(stream), "wc_stream", OutputMode.Complete)
-    val streamed = spark.table("wc_stream")
+    val streamed = EventStream.drain(
+      EventStream.windowedCounts(stream), OutputMode.Complete)
       .select("bucket", "event_type", "n")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     val batch = Relational.defs("q17_time_window")(spark, dir)
@@ -133,12 +132,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dropDuplicates == batch DISTINCT on the key projection") {
-    EventStream.runToMemory(
+    val streamed = EventStream.drain(
       EventStream.readEvents(spark, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type"),
-      "dedup_stream", OutputMode.Append)
-    val streamed = spark.table("dedup_stream")
+      OutputMode.Append)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val batch = EventStream.readEvents(spark, dir).sparkSession
       .read.parquet(s"$dir/events.parquet")
@@ -146,6 +144,60 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(streamed.toSet === batch.toSet)
     assert(streamed.length === streamed.toSet.size, "no duplicate emissions")
+  }
+
+  /** Temp view names of session `s` (memory sinks register as these). */
+  private def tempViews(s: org.apache.spark.sql.SparkSession): Set[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("twins leave no sink view and no active query behind; reruns agree") {
+    // a fresh session: temp views and the query manager are per session,
+    // so sinks left by other suites' twin runs cannot mask a leak here
+    val s = spark.newSession()
+    val views0 = tempViews(s)
+    val active0 = s.streams.active.map(_.id).toSet
+    // st_chi2 drains twice; st_markov self-joins a checkpointed aggregate
+    // of its sink
+    val names = Seq("st_time_window", "st_chi2", "st_markov")
+    def run(): Map[String, Seq[String]] = names.map { n =>
+      n -> SparkEntry.queries(n)(s, dir).collect().map(_.toString).toSeq.sorted
+    }.toMap
+    val first = run()
+    assert(tempViews(s) === views0, "a sink stayed registered as a temp view")
+    assert(s.streams.active.map(_.id).toSet === active0,
+      "a drained query is still active")
+    names.foreach(n => assert(first(n).nonEmpty, s"$n collected no rows"))
+    assert(run() === first)
+    assert(tempViews(s) === views0)
+  }
+
+  test("drain: the frame still collects after its sink's name is gone") {
+    val s = spark.newSession()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      // QueryStartedEvent reaches session listeners synchronously on start
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.name)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val views0 = tempViews(s)
+    s.streams.addListener(listener)
+    val drained =
+      try EventStream.drain(
+        EventStream.lwwState(EventStream.readEventRecords(s, dir)).toDF(),
+        OutputMode.Update)
+      finally s.streams.removeListener(listener)
+    assert(started.size === 1)
+    val sink = started.peek()
+    assert(tempViews(s) === views0)
+    assert(!s.catalog.tableExists(sink) && !spark.catalog.tableExists(sink))
+    intercept[org.apache.spark.sql.AnalysisException](s.table(sink))
+    assert(s.streams.active.isEmpty)
+    val users = drained.select("user_id").distinct().count()
+    assert(users > 0)
+    assert(users === graft.tables.Tables.events(s, dir)
+      .select("user_id").distinct().count())
   }
 
   test("watermark drops late data and finalizes windows exactly once") {
@@ -216,14 +268,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful sessionization: emitted + open sessions == batch sessions") {
-    import spark.implicits._
-    val stream = EventStream.readEvents(spark, dir)
-      .select(col("event_id"), col("ts_ns"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventStream.Event]
-    EventStream.runToMemory(
-      EventStream.sessionize(stream).toDF(), "sess_stream", OutputMode.Append)
-    val emitted = spark.table("sess_stream").collect()
+    val emitted = EventStream.drain(
+      EventStream.sessionize(EventStream.readEventRecords(spark, dir)).toDF(),
+      OutputMode.Append).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toList
 
     val batch = Relational.defs("q16_sessionize")(spark, dir)
@@ -241,15 +288,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming LWW state == batch latest rule, tombstones surfaced") {
-    import spark.implicits._
-    val stream = EventStream.readEvents(spark, dir)
-      .select(col("event_id"), col("ts_ns"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventStream.Event]
-    EventStream.runToMemory(
-      EventStream.lwwState(stream).toDF(), "lww_stream", OutputMode.Update)
     // reconcile per-batch updates exactly as the driver query does
-    val got = spark.table("lww_stream")
+    val got = EventStream.drain(
+      EventStream.lwwState(EventStream.readEventRecords(spark, dir)).toDF(),
+      OutputMode.Update)
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("last_ts_us"), col("last_type"),
         col("last_value"), col("is_deleted"))).as("f"))

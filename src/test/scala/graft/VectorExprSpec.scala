@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.vector.{vecDot, vecMicroMean, topCentroids}
 import graft.operators.{Dedup, TextAnalysis}
-import graft.tables.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
