@@ -39,34 +39,10 @@ object SparkEntry {
     * figure silently absorbs a memo build that belongs to the family
     * (the r12/r13 attribution postmortems: the alphabetically-first
     * consumer of an unwarmed store read 40–200 s for seconds of query
-    * work).
+    * work). What each build owns is recorded when it runs
+    * ([[graft.core.Memo.builtBy]]), not declared here.
     */
   private[graft] def memoWarmers: Seq[(String, (SparkSession, String) => Unit)] =
     Relational.memoWarmers ++ Dedup.memoWarmers ++ Multimodal.memoWarmers ++
       Similarity.memoWarmers
-
-  /** The memo-store stages each warmer OWNS (builds itself, as opposed to
-    * dependencies earlier in [[memoWarmers]]' order it merely consumes) —
-    * what Bench evicts ([[graft.operators.Dedup.evictStages]]) before the
-    * warm re-run of a slow `_build_*` entry, so the re-run rebuilds this
-    * build's exact marginal work with its dependencies still memoized
-    * (e.g. a warm `_build_dd_pairs` re-bands the stored signatures; it
-    * does not re-MinHash the corpus). BenchContractSpec pins that every
-    * warmer has a mapping, so a new build can't silently opt out of the
-    * cold/warm attribution rule.
-    */
-  private[graft] def memoStages: Map[String, Seq[String]] = Map(
-    "trade_graph" -> Seq("trade_edges"),
-    "seeded_bfs"  -> Seq("graph_nodes", "seeded_bfs"),
-    "walk_corpus" -> Seq("walks"),
-    "copurchase"  -> Seq("copurchase_capped", "copurchase_scored"),
-    "dd_sig"      -> Seq("sig"),
-    "dd_pairs"    -> Seq("pairs"),
-    "dd_pairs_verified" -> Seq("pairs_verified"),
-    "dd_pair_stats"  -> Seq("pair_stats_100"),
-    "dd_prefix_cand" -> Seq("prefix_cand_0.5"),
-    "mm_images"   -> Seq("phash"),
-    "mm_clipdiff" -> Seq("clipdiff"),
-    "ann_panel"   -> ("ann_codes" +:
-      Similarity.PanelMethods.map(m => s"ann_panel_$m")))
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Memo
 import graft.functions.{MinHash, MinHashSignature}
 import graft.functions.MinHash.{K, P, R}
 import graft.functions.hashes.portableHash60
@@ -91,7 +92,7 @@ object Dedup {
     // sf0.1). Volume is pair-bounded (the capped join's output), never
     // corpus-text-sized, so it fits the store discipline; Bench attributes
     // the build under `_build_dd_pair_stats`.
-    memoized(s"pair_stats_$dfCap", docs) {
+    Memo(s"pair_stats_$dfCap", docs) {
       val shAll = shingles(docs)
       val kept = shAll.groupBy("s").agg(count(lit(1)).as("df"))
         .filter(col("df") <= dfCap).select("s")
@@ -198,7 +199,7 @@ object Dedup {
     * Bench attributes the build under `_build_dd_prefix_cand`.
     */
   private def prefixCandCounts(docs: DataFrame, threshold: Double): DataFrame =
-    memoized(s"prefix_cand_$threshold", docs) {
+    Memo(s"prefix_cand_$threshold", docs) {
       val sh = shingles(docs)
       val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
       val lists = sh.join(dfreq, "s")
@@ -523,7 +524,7 @@ object Dedup {
     * to the oracle SQL.
     */
   def minhashSignatures(docs: DataFrame): DataFrame =
-    memoized("sig", docs) {
+    Memo("sig", docs) {
       rowLocalSignatures(docs) // scan-stage build: no exchange, see below
     }
 
@@ -572,88 +573,11 @@ object Dedup {
   def rowLocalBands(docs: DataFrame): DataFrame =
     bandsOf(rowLocalSignatures(docs))
 
-  // Signature/candidate-pair STORE: the MinHash signature table and the
-  // LSH pair table are THE shared intermediates of the near-dedup stack —
-  // clustering, resolution, edit-distance verify, Jaccard verify and
-  // estimation all consume the SAME pairs (and estimation the same
-  // signatures). A production pipeline materializes those tables once per
-  // corpus snapshot and fans consumers out from them (the in-session
-  // analog of [[writeSignatureStore]]); recomputing the MinHash pass per
-  // consumer multiplies the corpus scan count for no information. Keyed
-  // by (session, stage, canonicalized input plan): bit-identical input
-  // lineage → the one materialized result. Volume per entry is
-  // O(docs × K) signature cells — never corpus-text-sized.
-  //
-  // Lifecycle: the store is BOUNDED (insertion-order eviction past
-  // MaxStoreEntries — a driver cycling many corpus snapshots can't grow
-  // block storage monotonically; an evicted entry's checkpoint blocks are
-  // ContextCleaner-reclaimed once the last consumer drops its frame,
-  // because raw localCheckpoint RDDs — unlike CacheManager pins — are
-  // cleaner-eligible) plus the application-end listener discipline of
-  // [[graft.tables.Tables.load]]. Same caveat as that cache: the key is
-  // the PLAN, so a parquet source regenerated IN PLACE during one
-  // session would be served the prior file's stored signatures — the
-  // driver test dirs are write-once; a live-ingest deployment keys its
-  // store on snapshot ids instead.
-  // 48 = two test dirs x the ~14 memoized stages (sig/pairs/phash/
-  // clipdiff/walks/trade graph/nodes/BFS/co-purchase/5 ann panels x2)
-  // with headroom — a full suite run stays eviction-free while the bound
-  // still stops monotonic growth
-  private val MaxStoreEntries = 48
-  private val corpusStore = new java.util.LinkedHashMap[
-    (SparkSession, String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]()
-  private val storeHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Evict this session's memo entries for the given stages — how Bench
-    * forces a WARM re-build of one `_build_*` attribution entry: only the
-    * stages the build OWNS ([[graft.SparkEntry.memoStages]]) are dropped,
-    * so its dependencies stay memoized and the re-run measures exactly
-    * the marginal work the cold run measured, minus first-touch JIT.
-    * Evicted checkpoints are ContextCleaner-reclaimed (see store doc).
-    */
-  private[graft] def evictStages(spark: SparkSession, stages: Set[String]): Unit =
-    corpusStore.synchronized {
-      corpusStore.keySet.removeIf(k => (k._1 eq spark) && stages(k._2))
-    }
-
-  private[graft] def memoized(stage: String, input: DataFrame)
-                      (build: => DataFrame): DataFrame = {
-    val spark = input.sparkSession
-    if (storeHooked.add(spark))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          corpusStore.synchronized {
-            corpusStore.keySet.removeIf(k => k._1 eq spark)
-            storeHooked.remove(spark)
-          }
-      })
-    val key = (spark, stage, input.queryExecution.analyzed.canonicalized)
-    // the build (a Spark job) runs OUTSIDE the lock; a concurrent first
-    // call can double-build — idempotent, and the loser's checkpoint
-    // blocks are ContextCleaner-reclaimed. (A computeIfAbsent would also
-    // be a recursive map update: the "pairs" builder calls
-    // minhashSignatures, which memoizes on this same map.)
-    corpusStore.synchronized {
-      val hit = corpusStore.get(key)
-      if (hit != null) return hit
-    }
-    val built = build.localCheckpoint(true)
-    corpusStore.synchronized {
-      val prev = corpusStore.get(key)
-      if (prev != null) prev
-      else {
-        corpusStore.put(key, built)
-        if (corpusStore.size > MaxStoreEntries) {
-          val it = corpusStore.entrySet.iterator
-          it.next(); it.remove() // eldest inserted; blocks freed by cleaner
-        }
-        built
-      }
-    }
-  }
+  // The MinHash signature table and the LSH pair table are THE shared
+  // intermediates of the near-dedup stack — clustering, resolution,
+  // edit-distance verify, Jaccard verify and estimation all consume the
+  // SAME pairs (and estimation the same signatures) — so both live in the
+  // memo store ([[graft.core.Memo]]).
 
   /** LSH candidate pairs: band the K-wide signature (R rows/band), bucket
     * by md5 of the band slice, emit distinct doc pairs sharing any bucket.
@@ -663,7 +587,7 @@ object Dedup {
     * the stored table.
     */
   def minhashLshPairs(docs: DataFrame): DataFrame =
-    memoized("pairs", docs) {
+    Memo("pairs", docs) {
       lshPairsFromSignatures(minhashSignatures(docs))
     }
 
@@ -808,7 +732,7 @@ object Dedup {
     * the build under `_build_dd_pairs_verified`.
     */
   private def lshVerifiedPairStats(docs: DataFrame): DataFrame =
-    memoized("pairs_verified", docs) {
+    Memo("pairs_verified", docs) {
       val cand = minhashLshPairs(docs)
       val sets = shingles(docs).groupBy("doc_id")
         .agg(collect_set(col("s")).as("sh"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Memo
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1037,8 +1038,7 @@ object Multimodal {
     // signatures (pairs self-join reads it twice; st_phash probes it as
     // history; pixel stats project from it) — same corpus store, same
     // lifecycle. O(docs × 8) cells.
-    if (docs.isStreaming) build
-    else Dedup.memoized("phash", docs)(build)
+    Memo("phash", docs)(build)
   }
 
   /** Perceptual hash per document: projection of [[imageTable]]. The
@@ -1216,8 +1216,7 @@ object Multimodal {
           }
         }
       }).toDF()
-    if (docs.isStreaming) build
-    else Dedup.memoized("clipdiff", docs)(build)
+    Memo("clipdiff", docs)(build)
   }
 
   /** Temporal motion statistics over the DECODED frame stream — the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Memo
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -105,7 +106,7 @@ object Similarity {
     * discipline as the MinHash signature table.
     */
   private def quantizedCandidates(candidates: DataFrame): DataFrame =
-    Dedup.memoized("ann_codes", candidates)(
+    Memo("ann_codes", candidates)(
       quantized(candidates, "neighbor_id"))
 
   def srpBuckets(emb: DataFrame, tables: Int, bits: Int, dim: Int): DataFrame =
@@ -748,7 +749,7 @@ object Similarity {
     * read marginal cost (the r13 attribution discipline).
     */
   private[graft] def panelTopK(method: String, e: DataFrame): DataFrame =
-    Dedup.memoized(s"ann_panel_$method", e) {
+    Memo(s"ann_panel_$method", e) {
       val q = panelQueries(e)
       method match {
         case "bf"    => bruteForceTopK(q, e, k = 5)

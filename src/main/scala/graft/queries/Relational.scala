@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.Memo
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -2410,16 +2411,13 @@ object Relational {
     * walk corpus): undirected bipartite edges between customers (even
     * node ids) and suppliers (odd) that traded, derived from
     * orders⋈lineitem ONCE PER SESSION per dir via the in-session memo
-    * ([[graft.operators.Dedup.memoized]] — the walk-corpus/imageTable
+    * ([[graft.core.Memo]] — the walk-corpus/imageTable
     * discipline, promoted family-wide per the r12 verdict: eleven
     * consumers were each re-running the fact join + distinct). The memo
     * key is the un-executed [[tradeEdgesPlan]], so a DIFFERENT dir (or a
     * changed source table lineage) builds its own graph; in-session
     * only — no cross-run state.
     */
-  private[graft] def tradeEdgesForDiag(spark: SparkSession, dir: String): DataFrame =
-    tradeEdges(spark, dir)
-
   private def tradeEdges(spark: SparkSession, dir: String): DataFrame = {
     val plan = tradeEdgesPlan(spark, dir)
     // Partition ONCE by src at build — the Pregel discipline. Every
@@ -2433,7 +2431,7 @@ object Relational {
     // SAME q161 iteration at 3.3 s or 36.5 s depending on which way it
     // fell. At 100 TB this is the difference between per-iteration
     // message passing and per-iteration graph movement.
-    graft.operators.Dedup.memoized("trade_edges", plan)(
+    Memo("trade_edges", plan)(
       plan.repartition(spark.sessionState.conf.numShufflePartitions,
         col("src")))
   }
@@ -2443,7 +2441,7 @@ object Relational {
     * the same distinct-src shuffle.
     */
   private def graphNodes(edges: DataFrame): DataFrame =
-    graft.operators.Dedup.memoized("graph_nodes", edges)(
+    Memo("graph_nodes", edges)(
       edges.select(col("src").as("node")).distinct())
 
   /** The shared K=8-seed, 8-hop, σ-carrying multi-source BFS — ONE
@@ -2465,7 +2463,7 @@ object Relational {
     * since a row's (dist, σ) is fixed at first discovery.
     */
   private def seededBfsSigma(edges: DataFrame): DataFrame =
-    graft.operators.Dedup.memoized("seeded_bfs", edges) {
+    Memo("seeded_bfs", edges) {
       val seeds = graphNodes(edges).orderBy("node").limit(8)
         .select(col("node").as("seed")).localCheckpoint(true)
       var visited = seeds
@@ -3256,21 +3254,23 @@ object Relational {
   }
 
   private def q94(spark: SparkSession, dir: String): DataFrame = {
-    val dim = activityDim(spark, dir)
+    // both sides derive from events: the aliases name which user_id is
+    // which, so the predicate never rests on the ambiguous-self-join rewrite
+    val dim = activityDim(spark, dir).as("d")
     val fact = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), expr("ts_ns div 1000").as("pts_us"),
-        col("value"))
+        col("value")).as("f")
     fact.join(dim,
-        fact("user_id") === dim("user_id")
+        col("f.user_id") === col("d.user_id")
           && col("pts_us") >= col("from_us")
           && (col("to_us").isNull || col("pts_us") < col("to_us")),
         "left")
-      .select(fact("user_id"),
+      .select(col("f.user_id"),
         coalesce(col("state"), lit("none")).as("state"), col("value"))
       .groupBy("state")
       .agg(count(lit(1)).as("n_purchases"),
-        countDistinct(fact("user_id")).as("n_users"),
+        countDistinct(col("user_id")).as("n_users"),
         sum(d2(col("value"))).cast("double").as("revenue"))
       .orderBy("state")
   }
@@ -5760,7 +5760,7 @@ object Relational {
     val pdeg = buyers.groupBy("part").agg(count(lit(1)).as("pdeg"))
     val plan = buyers
       .join(broadcast(pdeg.filter(col("pdeg").between(2, 40))), "part")
-    graft.operators.Dedup.memoized("copurchase_capped", plan)(plan)
+    Memo("copurchase_capped", plan)(plan)
   }
 
   /** The aggregated co-purchase pair frame (a < b, w = distinct common
@@ -5787,7 +5787,7 @@ object Relational {
 
   private def coPurchaseScored(spark: SparkSession, dir: String): DataFrame = {
     val plan = coPurchasePairsFromCapped(coPurchaseCapped(spark, dir))
-    graft.operators.Dedup.memoized("copurchase_scored", plan)(plan)
+    Memo("copurchase_scored", plan)(plan)
   }
 
   /** The shared in-session corpora, in dependency order — Bench forces
@@ -6171,15 +6171,15 @@ object Relational {
     memoizedWalks(spark, dir)
 
   /** The walk corpus, built once per (session, dir) and shared by q175
-    * and q179 (Dedup's in-session memo — the imageTable discipline:
-    * the expensive generation runs once, projections are free).
+    * and q179 ([[graft.core.Memo]] — the imageTable discipline: the
+    * expensive generation runs once, projections are free).
     */
   private def memoizedWalks(spark: SparkSession, dir: String): DataFrame =
     // keyed on the trade-graph PLAN — it names BOTH parents (orders AND
     // lineitem), so a changed lineage in either source builds a fresh
     // corpus (the r12 ADVICE fix: keying on orders alone would serve a
     // stale corpus after a same-session lineitem change)
-    graft.operators.Dedup.memoized("walks", tradeEdgesPlan(spark, dir)) {
+    Memo("walks", tradeEdgesPlan(spark, dir)) {
       randomWalksFromEdges(tradeEdges(spark, dir)).localCheckpoint(true)
     }
 

@@ -25,7 +25,10 @@ import org.apache.spark.sql.streaming.OutputMode
   *    compile seconds during the run, so a run that recompiles what an
   *    earlier run compiled shows as classes > 0;
   *  - `build`: each selected memo build forced once, timed, on the fresh
-  *    memo a new JVM has (`[build]` lines), in dependency order;
+  *    memo a new JVM has (`[build]` lines), in dependency order. What a
+  *    build owns is not declared (Bench records it with
+  *    [[graft.core.Memo.builtBy]]), so a build selected without the ones
+  *    before it also times the dependencies it builds;
   *  - `jobs`: per-JOB breakdown of one warm run (`[job]` lines: wall
   *    duration, stages and task counts) — tells "one join is slow" from
   *    "20 fixed-cost jobs at 0.2 s each", which no end-to-end timer can;

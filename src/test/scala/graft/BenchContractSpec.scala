@@ -176,22 +176,6 @@ class BenchContractSpec extends AnyFunSuite {
     assert(parts.map(_.abs).sum == value)
   }
 
-  test("every memo warmer has a memoStages eviction mapping") {
-    // the _build_* cold/warm rule needs to know which memo stages a build
-    // OWNS to evict before its warm re-run; a warmer added without a
-    // mapping would silently fall back to a no-op eviction, making its
-    // "warm" figure a memo cache hit instead of a rebuild
-    val missing = SparkEntry.memoWarmers.map(_._1)
-      .filterNot(SparkEntry.memoStages.contains)
-    assert(missing.isEmpty,
-      s"memo warmers without a memoStages entry: ${missing.mkString(", ")}")
-    // and no mapping dangles on a warmer that no longer exists
-    val dangling = SparkEntry.memoStages.keySet --
-      SparkEntry.memoWarmers.map(_._1).toSet
-    assert(dangling.isEmpty,
-      s"memoStages entries without a warmer: ${dangling.mkString(", ")}")
-  }
-
   test("rerun: a slow run is re-run once after evict, warm row first") {
     val events = scala.collection.mutable.ArrayBuffer.empty[String]
     var runs = 0
@@ -246,6 +230,28 @@ class BenchContractSpec extends AnyFunSuite {
       assert(root.get("entries").size() == 4)
       assert(root.get("entries").get(0).get("sec").asDouble() == 1.235)
     } finally java.nio.file.Files.deleteIfExists(f)
+  }
+
+  test("a failed full-record write says so on stderr only and does not throw") {
+    // a path under a regular file can never be created
+    val file = java.nio.file.Files.createTempFile("bench_full", ".txt")
+    val path = file.resolve("BENCH_FULL.json").toString
+    val (out, err) = (new java.io.ByteArrayOutputStream,
+      new java.io.ByteArrayOutputStream)
+    val (prevOut, prevErr) = (System.out, System.err)
+    System.setOut(new java.io.PrintStream(out, true, "UTF-8"))
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try Bench.writeFullRecord(Seq(("a", 1.0, true)), sfDir, path)
+    finally {
+      System.setOut(prevOut)
+      System.setErr(prevErr)
+      java.nio.file.Files.deleteIfExists(file)
+    }
+    val prefix = s"[bench] full record not written: $path: "
+    val line = err.toString("UTF-8").linesIterator.find(_.startsWith(prefix))
+    assert(line.exists(_.stripPrefix(prefix).matches("""[\w.$]+: .*""")),
+      s"stderr: ${err.toString("UTF-8")}")
+    assert(!out.toString("UTF-8").contains("[bench]"), "stdout is the contract")
   }
 
   test("driver contract consistency: every oracle names a query; rows-only set pinned") {

@@ -1,17 +1,13 @@
 package graft
 
-import graft.apps.Apps
-import graft.core.KV
-import graft.functions.ReduceFAggregator
 import graft.operators.Skew
 import graft.queries.Relational
 import graft.tables.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Coverage for the auxiliary operator surface: the SQL-registrable generic
-  * reducef Aggregator, the salted skew join, sketch-aggregate error bounds,
-  * and CSV/JSON source-sink roundtrips.
+/** Coverage for the auxiliary operator surface: the salted skew join,
+  * sketch-aggregate error bounds, and CSV/JSON source-sink roundtrips.
   */
 class OperatorExtrasSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -116,31 +112,6 @@ class OperatorExtrasSpec extends AnyFunSuite {
     matrixProfile(const, 6).foreach { case (i, s, j) =>
       assert(s == 0L && j == (if (i >= 6) 0 else i + 6), s"pos $i -> $j")
     }
-  }
-
-  test("ReduceFAggregator: wc reducef via typed Dataset agg == sequential") {
-    val files = TestSpark.corpus(20)
-    val kvs: Seq[KV] = files.flatMap { case (f, c) => Apps.WordCount.map(f, c) }
-    val agg = ReduceFAggregator(Apps.WordCount).toColumn
-    val got = spark.createDataset(kvs)
-      .groupByKey(_.key)
-      .mapValues(_.value)
-      .agg(agg.name("reduced"))
-      .collect().map { case (k, v) => s"$k $v" }.sorted.toSeq
-    val expected = graft.core.MapReduceJob.sequential(Apps.WordCount, files).sorted
-    assert(got === expected)
-  }
-
-  test("ReduceFAggregator registered as SQL UDAF") {
-    val files = TestSpark.corpus(10)
-    val kvs = files.flatMap { case (f, c) => Apps.WordCount.map(f, c) }
-    spark.udf.register("wc_reduce", udaf(ReduceFAggregator(Apps.WordCount)))
-    spark.createDataset(kvs).createOrReplaceTempView("kvs")
-    val got = spark.sql(
-      "SELECT key, wc_reduce(value) AS v FROM kvs GROUP BY key ORDER BY key")
-      .collect().map(r => s"${r.getString(0)} ${r.getString(1)}").toSeq
-    val expected = graft.core.MapReduceJob.sequential(Apps.WordCount, files).sorted
-    assert(got === expected)
   }
 
   test("salted join == plain join on skewed data") {

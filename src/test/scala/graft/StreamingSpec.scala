@@ -71,9 +71,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(dataBatches >= 3,
       s"expected one micro-batch per slice, saw $dataBatches with data")
 
-    val got = spark.table("late_slices")
+    val got = try spark.table("late_slices")
       .select("bucket", "event_type", "n")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    finally spark.catalog.dropTempView("late_slices")
     val want = Set(
       ("2024-03-01 10:00:00", "click", 1L),
       ("2024-03-01 10:00:00", "view", 2L), // includes the late event 4
@@ -115,7 +116,10 @@ class StreamingSpec extends AnyFunSuite {
         qq.processAllAvailable()
         qq.stop()
         qq
-      } finally spark.conf.set(key, prev)
+      } finally {
+        spark.conf.set(key, prev)
+        spark.catalog.dropTempView("dup_rate_state_probe")
+      }
     val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
     val panel = graft.operators.Dedup.dupRateEstimate(
       graft.tables.Tables.load(spark, dir, "documents"))
@@ -230,7 +234,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(out.find(_._1 == "10:00").get._2 === 2L,
         s"late 10:30 row must not count: $out")
       assert(out.find(_._1 == "11:00").get._2 === 1L, out.toString)
-    } finally q.stop()
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView("late_test")
+    }
   }
 
   test("restart from checkpoint resumes exactly-once into a file sink") {
@@ -339,7 +346,7 @@ class StreamingSpec extends AnyFunSuite {
         e(7, 2000000L, 2, "view"))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("funnel_ms")
+    val got = try spark.table("funnel_ms")
       .groupBy("user_id")
       .agg(max(struct(col("stage_reached"), col("t_signup"), col("t_view"),
         col("t_click"), col("t_purchase"))).as("f"))
@@ -349,6 +356,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) ->
         (r.getInt(1), (2 to 5).map(i =>
           if (r.isNullAt(i)) -1L else r.getLong(i)))).toMap
+    finally spark.catalog.dropTempView("funnel_ms")
     assert(got(1L) === ((4, Seq(1000L, 2000L, 3000L, 4000L))),
       s"user 1: ${got(1L)}")
     assert(got(2L) === ((2, Seq(1000L, 2000L, -1L, -1L))),
@@ -377,10 +385,11 @@ class StreamingSpec extends AnyFunSuite {
         e(5, 9L * day + 1, 3, "purchase"))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("attr_ms")
+    val got = try spark.table("attr_ms")
       .select("ts_ns", "attr", "lag_ns").collect()
       .map(r => r.getLong(0) ->
         (r.getInt(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
+    finally spark.catalog.dropTempView("attr_ms")
     assert(got(2L * day) === ((0, -1L)), "no click ever -> unattributed")
     assert(got(3L * day) === ((1, 2L * day)), "cross-batch click credited")
     assert(got(9L * day + 1) === ((0, -1L)), "horizon exceeded -> unattributed")
@@ -405,8 +414,9 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(e(3, 3000L, 1, "click"), e(4, 1000L, 2, "signup"))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("markov_ms").collect()
+    val got = try spark.table("markov_ms").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    finally spark.catalog.dropTempView("markov_ms")
     assert(got === Set((1L, "signup", "view"), (1L, "view", "click")),
       s"got $got")
   }
@@ -433,8 +443,9 @@ class StreamingSpec extends AnyFunSuite {
         e(4, 4000L, 1, "purchase"), e(5, 1000L, 2, "view"))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("seq2_ms").collect()
+    val got = try spark.table("seq2_ms").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
+    finally spark.catalog.dropTempView("seq2_ms")
     assert(got === Set((1L, "signup>view>click"), (1L, "view>click>purchase")),
       s"got $got")
   }
@@ -456,9 +467,10 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(("a", 5L, 50L), ("a", 6L, 25L), ("a", 7L, 30L))
       q.processAllAvailable()
     } finally q.stop()
-    val fin = spark.table("topk_ms")
+    val fin = try spark.table("topk_ms")
       .groupBy("event_type").agg(max_by(col("ids"), col("seen")).as("ids"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    finally spark.catalog.dropTempView("topk_ms")
     // (50,#5) (40,#1) (30,#3 beats #7 by id) — 25 and the tie loser out
     assert(fin("a") === Seq(5L, 1L, 3L))
   }
