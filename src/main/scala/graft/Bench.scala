@@ -153,10 +153,10 @@ object Bench {
   def warmUp(spark: SparkSession, sfDir: String): Unit =
     timed(SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count())
 
-  /** Wall seconds `f` took, and its result or what it threw. */
+  /** Wall seconds `f` took, and its result or the non-fatal error it threw. */
   def timed[A](f: => A): (Double, Either[Throwable, A]) = {
     val t0 = System.nanoTime()
-    val r = try Right(f) catch { case e: Throwable => Left(e) }
+    val r = try Right(f) catch { case NonFatal(e) => Left(e) }
     ((System.nanoTime() - t0) / 1e9, r)
   }
 

@@ -17,7 +17,7 @@ object Verify {
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(
           s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }

@@ -936,11 +936,13 @@ object Dedup {
     */
   /** Release the block storage behind an eager localCheckpoint snapshot —
     * the loop below supersedes one snapshot per iteration, and waiting for
-    * the ContextCleaner would pin every generation simultaneously.
+    * the ContextCleaner would pin every generation simultaneously. A
+    * superseded snapshot is never read again: no lineage WARN is due.
     */
   private def unpersistSnapshot(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        GraftShims.releaseBlocks(l.rdd)
     }
 
   def duplicateClusters(docs: DataFrame, maxIters: Int = 20): DataFrame = {

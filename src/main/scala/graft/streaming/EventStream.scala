@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming surface: the streaming twins of the batch event
@@ -507,41 +507,39 @@ object EventStream {
     row.getLong(0)
   }
 
-  /** Start a stream, drain the finite source, stop — with the state-store
-    * partition count lowered for the one-micro-batch local run and the
-    * session value restored afterwards. ONE definition of the local
-    * stream harness, shared by every sink shape.
+  /** Start a stream, drain the finite source, stop — ONE definition of the
+    * local stream harness, shared by every sink shape; returns the stopped
+    * query, whose progress a caller may read. State-store partitions are
+    * taken from shuffle partitions at query start, and 32 stores is pure
+    * setup overhead for a one-micro-batch local run, so the count is
+    * lowered here and the session value restored afterwards (a real
+    * deployment sizes it to the cluster instead).
     */
-  private def runDrained(spark: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private[graft] def runDrained(spark: SparkSession)(
+      start: => StreamingQuery): StreamingQuery = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "8")
     try {
       val q = start
       try q.processAllAvailable() finally q.stop()
+      q
     } finally spark.conf.set(key, prev)
   }
 
   private val drainIds = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Run a streaming fold on the finite source into a memory sink, block
-    * until all available data is processed, and return the sink's rows —
-    * the local harness every `st_*` twin finalizes over.
-    *
-    * State-store partition count is taken from shuffle partitions at query
-    * start; 32 stores is pure setup overhead for a one-micro-batch local
-    * run, so the harness temporarily lowers it and restores the session
-    * value afterwards (a real deployment sizes it to the cluster instead).
-    * Even so, a stream run measures micro-batch + state-store startup on
-    * top of the operator itself — bench numbers for st_* queries include
-    * that harness overhead by design.
+  /** Run a streaming fold on the finite source into a memory sink through
+    * [[runDrained]] and return the sink's rows — the local harness every
+    * `st_*` twin finalizes over. A stream run measures micro-batch and
+    * state-store startup on top of the operator itself, so bench numbers
+    * for st_* queries include that harness overhead by design.
     *
     * The sink's name is unique per call and never leaves this function:
     * the temp view the memory sink registers is dropped before returning.
-    * The returned frame is already analyzed over the sink's `MemoryPlan`
-    * (planned as a `LocalTableScanExec`), so it keeps the sink's rows
-    * alive exactly as long as the caller holds it.
+    * The rows, already on the driver (collecting the sink runs no job),
+    * come back as a local relation, which a finalizer may read any number
+    * of times and join to itself.
     */
   def drain(df: DataFrame, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
@@ -550,7 +548,8 @@ object EventStream {
       runDrained(spark) {
         df.writeStream.outputMode(mode).format("memory").queryName(name).start()
       }
-      spark.table(name)
+      val sink = spark.table(name)
+      spark.createDataFrame(sink.collectAsList(), sink.schema)
     } finally spark.catalog.dropTempView(name)
   }
 
@@ -758,9 +757,6 @@ object EventStream {
     // evaluation (distinct members vs mask passers) finalizes
     // batch-side over the classes-row masks. Shares q114's oracle
     // verbatim.
-    // The finalize consumes the masks TWICE (members join + test
-    // crossJoin); a MemoryPlan self-join fails attribute dedup (the
-    // st_markov lesson), so the classes-row sink is localCheckpointed.
     "st_bitmap" -> ((s, d) =>
       graft.queries.Relational.bitmapFinalize(
         drain(
@@ -768,15 +764,13 @@ object EventStream {
             .select(col("event_type"), col("user_id"))
             .groupBy(col("event_type"))
             .agg(bit_or(graft.queries.Relational.bitmapSlot).as("mask")),
-          OutputMode.Complete).localCheckpoint(true),
+          OutputMode.Complete),
         graft.tables.Tables.events(s, d)
           .select(col("event_type"), col("user_id")))),
     // Streaming interpolation: the day-grain count (the only
     // corpus-sized reduction in q119) folds in-stream; the
     // decimate-and-rebuild grid work is classes×days and finalizes
     // sink-side. Shares q119's oracle verbatim.
-    // The grid derivation self-joins the day table (the st_markov
-    // MemoryPlan lesson) — localCheckpoint the classes×days sink.
     "st_interpolate" -> ((s, d) =>
       graft.queries.Relational.interpolateDaily(drain(
         readEvents(s, d)
@@ -784,7 +778,7 @@ object EventStream {
             expr("ts_ns div 86400000000000").as("d"))
           .groupBy(col("event_type"), col("d"))
           .agg(count(lit(1)).as("y")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming OLS trend: q111's moments are COMMUTATIVE exact-integer
     // sums, which is precisely what makes regression streamable — the
     // unbounded-cardinality reduction (events → day grain) runs in the
@@ -808,13 +802,11 @@ object EventStream {
     // Streaming SAX: the day-count reduction folds in-stream (st_holt's
     // shape); z-normalization, PAA segmenting, and symbol mapping
     // finalize sink-side through the shared saxFromDaily definition.
-    // Shares q139's oracle verbatim. The finalize joins the sink to its
-    // own class-moment rollup — localCheckpoint per the st_markov
-    // MemoryPlan lesson.
+    // Shares q139's oracle verbatim.
     "st_sax" -> ((s, d) =>
       graft.queries.Relational.saxFromDaily(drain(
         dailyFold(s, d, count(lit(1)).as("x")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming DTW: the corpus-sized reduction (events → daily cents
     // per class) folds in-stream as a watermarked day-window aggregate;
     // the sequential alignment DP finalizes sink-side over the
@@ -825,7 +817,7 @@ object EventStream {
     "st_dtw" -> ((s, d) =>
       graft.queries.Relational.dtwFromDaily(drain(
         dailyFold(s, d, sum(cents).as("cents")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming Wilson interval: the per-class (x, n) proportion counts
     // fold in-stream — state is one row per event class — and the
     // interval finalizes sink-side through the shared wilsonFromCounts,
@@ -838,7 +830,7 @@ object EventStream {
           .groupBy("event_type")
           .agg(sum(when(col("cents") >= 10000L, 1L).otherwise(0L)).as("x"),
             count(lit(1)).as("n")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming calibration: the per-cents (n, positives) counts grid
     // folds in-stream (value-range-bounded state, the st_ks discipline)
     // and the reliability buckets finalize sink-side through the shared
@@ -846,14 +838,14 @@ object EventStream {
     // drift monitoring. Shares q167's oracle VERBATIM.
     "st_calibration" -> ((s, d) =>
       graft.queries.Relational.calibrationFromCounts(drain(
-        purchaseGrid(s, d), OutputMode.Complete).localCheckpoint(true))),
+        purchaseGrid(s, d), OutputMode.Complete))),
     // Streaming isotonic recalibration: the same cents grid as
     // st_calibration folds in-stream; the minimax PAV fit finalizes
     // sink-side through the shared isotonicFromCounts — the live
     // monotone-recalibration curve. Shares q172's oracle VERBATIM.
     "st_isotonic" -> ((s, d) =>
       graft.queries.Relational.isotonicFromCounts(drain(
-        purchaseGrid(s, d), OutputMode.Complete).localCheckpoint(true))),
+        purchaseGrid(s, d), OutputMode.Complete))),
     // Streaming Benford: the leading-digit histogram of purchase values
     // folds in-stream — NINE keys of state, the cheapest possible
     // streaming fraud monitor (a drifting digit-1 share flags synthetic
@@ -868,7 +860,7 @@ object EventStream {
           .select(substring(col("cents").cast("string"), 1, 1)
             .cast("int").as("digit"))
           .groupBy("digit").agg(count(lit(1)).as("n")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming PR curve: the (score, label) grid folds in-stream —
     // state is the bounded price grid, like st_auc — and the nine-
     // threshold precision/recall/F1 sweep finalizes sink-side through
@@ -882,7 +874,7 @@ object EventStream {
             (col("event_type") === "purchase").cast("long").as("y"))
           .groupBy("cents")
           .agg(count(lit(1)).as("tot"), sum(col("y")).as("pos")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming AUC: the corpus-sized reduction (events → per-(score,
     // class) counts) folds in-stream as a Complete-mode aggregate whose
     // state is the bounded SCORE GRID (cents of a price range × ≤12
@@ -895,7 +887,7 @@ object EventStream {
         readEvents(s, d)
           .groupBy(cents.as("cents"), col("event_type"))
           .agg(count(lit(1)).as("n")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming KS drift: the value-count exchange (the only
     // corpus-sized reduction in q146) folds as a plain streaming
     // aggregate; the cumulative supremum finalizes sink-side over the
@@ -913,7 +905,7 @@ object EventStream {
               .as("c1"),
             sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
               .as("c2")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming RAKE: candidate-phrase extraction is STATELESS per
     // document (explode + filters), so it runs on the ingest stream
     // unchanged; the phrase-occurrence rollup folds as a streaming
@@ -940,7 +932,7 @@ object EventStream {
             .tokens(lower(col("text")))).as("w"))
           .groupBy("lang", "w")
           .agg(count(lit(1)).as("f")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming autocomplete: the vocabulary count folds in-stream
     // (tokenize + explode are stateless; the word rollup is the only
     // corpus-sized state); the prefix fan-out and NATIVE TopKPerKey
@@ -954,7 +946,7 @@ object EventStream {
             .tokens(lower(col("text")))).as("word"))
           .groupBy(col("word"))
           .agg(count(lit(1)).as("freq")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming decayed LTV: the per-(user, day) purchase rollup folds
     // in-stream (count + exact cents sum — both commutative); the
     // dyadic 2^(K-age) weighting finalizes sink-side through the
@@ -968,13 +960,12 @@ object EventStream {
             expr("ts_ns div 86400000000000").as("d"), cents.as("cents"))
           .groupBy(col("user_id"), col("d"))
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming survival panel: per-user activity spans are min/max
     // folds — commutative, so they stream as a plain aggregate; the
     // lifetime histogram + reverse-cumulative at-risk finalize
-    // sink-side via the shared survivalFromSpans (the sink self-joins
-    // through the grid — localCheckpoint per the st_markov lesson).
-    // Shares q135's oracle verbatim.
+    // sink-side via the shared survivalFromSpans. Shares q135's oracle
+    // verbatim.
     "st_survival" -> ((s, d) =>
       graft.queries.Relational.survivalFromSpans(drain(
         readEvents(s, d)
@@ -982,7 +973,7 @@ object EventStream {
             expr("ts_ns div 86400000000000").as("dd"))
           .groupBy(col("user_id"))
           .agg(min("dd").as("d0"), max("dd").as("d1")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     "st_enrich" -> ((s, d) =>
       drain(
         enrichedWindowedCounts(readEvents(s, d),
@@ -1012,8 +1003,7 @@ object EventStream {
     // full-corpus exact side stays a batch validation (dd_dup_rate).
     "st_dup_rate" -> ((s, d) =>
       graft.operators.Dedup.dupRateFromSampleFreq(
-        drain(dupRateMonitorAgg(s, d), OutputMode.Complete)
-          .localCheckpoint(true))),
+        drain(dupRateMonitorAgg(s, d), OutputMode.Complete))),
     // Stream-stream interval join through the real harness: two
     // independent file-stream sources over the same staged events dir
     // (cache-hit on the staging), joined on user + 30-minute window. The
@@ -1171,11 +1161,11 @@ object EventStream {
               .as("word"))
             .groupBy(col("word"), col("lang"))
             .agg(count(lit(1)).as("df_class")),
-          OutputMode.Complete).localCheckpoint(true),
+          OutputMode.Complete),
         drain(
           readDocuments(s, d).groupBy(col("lang"))
             .agg(count(lit(1)).as("lang_docs")),
-          OutputMode.Complete).localCheckpoint(true))),
+          OutputMode.Complete))),
     // Streaming matrix profile: the per-(class, day) cents rollup folds
     // as a watermarked day-window aggregate (st_dtw's fold, shared
     // shape); the O(L²) motif/discord kernel finalizes sink-side over
@@ -1186,7 +1176,7 @@ object EventStream {
     "st_matrix_profile" -> ((s, d) =>
       graft.queries.Relational.matrixProfileFromDaily(drain(
         dailyFold(s, d, sum(cents).as("cents")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming Theil–Sen: the live "is this class's revenue actually
     // trending" monitor — the per-(class, day) cents rollup folds as a
     // watermarked day-window aggregate (st_matrix_profile's fold) and
@@ -1195,7 +1185,7 @@ object EventStream {
     "st_theilsen" -> ((s, d) =>
       graft.queries.Relational.theilSenFromSeries(centsSeries(drain(
         dailyFold(s, d, sum(cents).as("cents")),
-        OutputMode.Complete).localCheckpoint(true)))
+        OutputMode.Complete)))
         .withColumnRenamed("nation", "event_type")
         .orderBy("event_type")),
     // Streaming RSI: the live momentum monitor — the same watermarked
@@ -1206,7 +1196,7 @@ object EventStream {
     "st_rsi" -> ((s, d) =>
       graft.queries.Relational.rsiFromDaily(drain(
         dailyFold(s, d, sum(cents).as("close_c")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming DiD: the live experiment readout — per-(cohort-class,
     // day) cent sums and event counts fold as a watermarked day-window
     // aggregate, and the four-cell panel (cutoff re-derived from the
@@ -1219,7 +1209,7 @@ object EventStream {
         dailyFold(s, d, sum(cents).as("s"), count(lit(1)).as("n"))
           .select(col("event_type"), to_date(col("day")).as("d"),
             col("s"), col("n")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming conformal coverage: the live "are the forecast intervals
     // still honest" monitor — the same watermarked day-window count fold
     // (own sink), with q183's order-statistic q̂ and held-out coverage
@@ -1230,7 +1220,7 @@ object EventStream {
     "st_conformal" -> ((s, d) =>
       graft.queries.Relational.conformalFromDaily(drain(
         dailyFold(s, d, count(lit(1)).as("x")),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming isotropy: the embedding-DRIFT monitor — the per-dimension
     // sufficient statistics (sᵢ, gᵢᵢ, n; state = one row per dim) fold as
     // a Complete-mode aggregate while vectors ingest, and the exact
@@ -1241,7 +1231,7 @@ object EventStream {
     "st_isotropy" -> ((s, d) =>
       graft.operators.Embeddings.isotropyFromPerDim(drain(
         graft.operators.Embeddings.perDimStats(readEmbeddings(s, d)),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming Mann–Kendall: the significance companion over the same
     // fold (own sink — streams are one-consumer); sign sum + the
     // tie-corrected integer variance finalize through the shared
@@ -1249,7 +1239,7 @@ object EventStream {
     "st_mann_kendall" -> ((s, d) =>
       graft.queries.Relational.mannKendallFromSeries(centsSeries(drain(
         dailyFold(s, d, sum(cents).as("cents")),
-        OutputMode.Complete).localCheckpoint(true)))
+        OutputMode.Complete)))
         .withColumnRenamed("nation", "event_type")
         .withColumnRenamed("n_months", "n_days")
         .orderBy("event_type")),
@@ -1262,7 +1252,7 @@ object EventStream {
       graft.operators.TextAnalysis.temperatureMixFromMass(drain(
         readDocuments(s, d).groupBy(col("source"))
           .agg(sum(col("n_chars")).as("chars")),
-        OutputMode.Complete).localCheckpoint(true))
+        OutputMode.Complete))
         .orderBy("source")),
     // Streaming Kneser–Ney: the corpus bigram counts — the model's only
     // corpus-sized reduction — fold in-stream as a Complete-mode
@@ -1273,7 +1263,7 @@ object EventStream {
     "st_kneser_ney" -> ((s, d) =>
       graft.operators.TextAnalysis.kneserNeyFromBigrams(drain(
         graft.operators.TextAnalysis.bigramCounts(readDocuments(s, d)),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // Streaming phonetic resolution: the term-count vocabulary — the only
     // corpus-sized reduction in the phonetic resolver — folds in-stream
     // (tokenize/explode stateless, the rollup a Complete-mode aggregate,
@@ -1284,7 +1274,7 @@ object EventStream {
     "st_phonetic" -> ((s, d) =>
       graft.operators.Dedup.phoneticFromVocab(drain(
         graft.operators.Dedup.phoneticVocabCounts(readDocuments(s, d)),
-        OutputMode.Complete).localCheckpoint(true))),
+        OutputMode.Complete))),
     // streaming last-touch attribution: per-purchase rows from the state
     // machine, aggregated to q93's day-level output with the IDENTICAL
     // exact arithmetic (decimal revenue, integer lag, NULL-guarded mean);
@@ -1386,14 +1376,11 @@ object EventStream {
     // per-user state; each event emits its one transition in Append
     // mode, the sink aggregate reproduces the batch matrix exactly
     "st_markov" -> ((s, d) => {
-      // localCheckpoint: a MemoryPlan self-join (trans ⋈ totals-from-
-      // trans) fails attribute dedup; the matrix is ≤ types² rows anyway
       val trans = drain(
         markovState(readEventRecords(s, d))
           .toDF("user_id", "from_type", "to_type"),
         OutputMode.Append)
         .groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
       val totals = trans.groupBy("from_type").agg(sum(col("n")).as("row_n"))
       trans.join(broadcast(totals), "from_type")
         .withColumn("p", col("n").cast("double") / col("row_n").cast("double"))

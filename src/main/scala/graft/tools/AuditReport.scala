@@ -22,7 +22,7 @@ object AuditReport {
         else warnings += 1
         println(s"$name\t$f")
       }
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         println(s"$name\t[BUILD-ERROR] ${e.getMessage}")
       }
     }

@@ -80,7 +80,7 @@ object CrashClusterHarness {
             f.toPath.resolve("cmdline")), "UTF-8")
           if (cmd.contains("CoarseGrainedExecutorBackend")) Some(f.getName.toLong)
           else None
-        } catch { case _: Throwable => None }
+        } catch { case scala.util.control.NonFatal(_) => None }
       }
   }
 
@@ -178,7 +178,7 @@ object CrashClusterHarness {
       try job.runOn(spark, files).collect().toSeq
         .map(kv => s"${kv.key} ${kv.value}").sorted
       catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           System.err.println(s"JOB FAILED ($phase): ${e.getMessage}")
           spark.stop(); sys.exit(4)
       }

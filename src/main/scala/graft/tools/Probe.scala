@@ -176,16 +176,18 @@ object Probe {
       val (tPlan, df) = timed {
         graft.streaming.EventStream.readEvents(spark, dir).groupBy().count()
       }
+      val name = s"floor_probe_$i"
       spark.conf.set(key, "8")
-      val (tStart, q) = timed {
-        df.writeStream.outputMode(OutputMode.Complete)
-          .format("memory").queryName(s"floor_probe_$i").start()
-      }
-      val tDrain = timed(q.processAllAvailable())._1
-      val tStop = timed(q.stop())._1
-      spark.conf.set(key, prev)
-      println(f"[floor] rep$i plan=$tPlan%.3f start=$tStart%.3f " +
-        f"drain=$tDrain%.3f stop=$tStop%.3f batches=${q.recentProgress.length}")
+      try {
+        val (tStart, q) = timed {
+          df.writeStream.outputMode(OutputMode.Complete)
+            .format("memory").queryName(name).start()
+        }
+        val tDrain = timed(q.processAllAvailable())._1
+        val tStop = timed(q.stop())._1
+        println(f"[floor] rep$i plan=$tPlan%.3f start=$tStart%.3f " +
+          f"drain=$tDrain%.3f stop=$tStop%.3f batches=${q.recentProgress.length}")
+      } finally { spark.conf.set(key, prev); spark.catalog.dropTempView(name) }
     }
   }
 

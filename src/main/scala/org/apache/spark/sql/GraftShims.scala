@@ -37,4 +37,10 @@ object GraftShims {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
   : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `RDD.unpersist(false)` through the `private[spark]` call it wraps,
+    * without its truncated-lineage WARN for a locally checkpointed RDD.
+    */
+  def releaseBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

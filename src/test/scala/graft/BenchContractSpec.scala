@@ -203,6 +203,12 @@ class BenchContractSpec extends AnyFunSuite {
     assert(fast.map(r => (r._1, r._3)) == Seq(("g", true)))
   }
 
+  test("timed: a non-fatal error is a Left; a fatal one ends the run") {
+    val (_, r) = Bench.timed[Unit](throw new IllegalStateException("x"))
+    assert(r.left.map(_.getMessage) == Left("x"))
+    intercept[InterruptedException](Bench.timed(throw new InterruptedException))
+  }
+
   test("rerunSec stays a cold-JIT filter across scale factors") {
     // calibrated 15 s at sf0.1; linear in sf above that so entries that
     // legitimately cost >15 s at sf1 don't all earn a second full run

@@ -313,6 +313,21 @@ class DedupSpec extends AnyFunSuite {
     assert(clusters.length === docs.count())
   }
 
+  test("duplicate clusters: a warm call keeps only the final label snapshot") {
+    val sc = spark.sparkContext
+    Dedup.duplicateClusters(docs).count() // warms the memoized LSH pairs
+    val before = sc.getPersistentRDDs.keySet
+    val out = Dedup.duplicateClusters(docs)
+    val added = sc.getPersistentRDDs.keySet -- before
+    // the edge list and every superseded snapshot were released; what the
+    // returned frame reads is the one checkpoint still held
+    val read = out.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    assert(added.size === 1, s"new persistent RDDs: $added")
+    assert(read.toSet === added)
+  }
+
   test("edit-distance verify: zero distance iff exact duplicate text") {
     val texts = docs.collect().map(r =>
       r.getLong(r.fieldIndex("doc_id")) -> r.getString(r.fieldIndex("text"))).toMap

@@ -55,8 +55,6 @@ class RosterAuditSpec extends AnyFunSuite {
       "one-row-per-SOURCE largest-remainder window over the folded mass"),
     "q114_bitmap_index" -> ("nested-loop probe against the 60-entry " +
       "bitmap-bucket index (user_id % 60 masks — fixed 60-row side)"),
-    "st_bitmap" -> ("batch twin of q114: same fixed 60-row bitmap-bucket " +
-      "broadcast"),
     "emb_silhouette" -> ("centroid table broadcast: one row per LABEL " +
       "(class cardinality — a clustering parameter, not corpus-scaled)"),
     // --- calendar / value-range bounded series ---
