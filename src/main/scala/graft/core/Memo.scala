@@ -2,6 +2,7 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -39,8 +40,11 @@ object Memo {
   // eviction-free while the bound still stops monotonic growth
   private[graft] val MaxStoreEntries = 48
   private val store = new java.util.LinkedHashMap[Key, DataFrame]()
+  // one application-end listener per SparkContext, not per session: it
+  // captures only the context, so the sessions an application cycles through
+  // newSession() are held by the bounded store alone
   private val hooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkContext]()
 
   /** `build`, materialized once per (session, `stage`, `input` lineage).
     * A streaming `input` has nothing to checkpoint: `build` is returned
@@ -49,12 +53,13 @@ object Memo {
   def apply(stage: String, input: DataFrame)(build: => DataFrame): DataFrame = {
     if (input.isStreaming) return build
     val spark = input.sparkSession
-    if (hooked.add(spark))
-      spark.sparkContext.addSparkListener(new SparkListener {
+    val sc = spark.sparkContext
+    if (hooked.add(sc))
+      sc.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
           store.synchronized {
-            store.keySet.removeIf(_.spark eq spark)
-            hooked.remove(spark)
+            store.keySet.removeIf(_.spark.sparkContext eq sc)
+            hooked.remove(sc)
           }
       })
     val key = Key(spark, stage, input.queryExecution.analyzed.canonicalized)

@@ -2,7 +2,7 @@ package graft.examples
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.tables.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-data curation: the library's operators composed the
@@ -27,32 +27,38 @@ object CurationPipeline {
 
   /** Run the pipeline; returns (stage → (docs, tokens)) for reporting and
     * the per-doc final frame (doc_id, source, split, seq_id).
+    *
+    * The stage counts cost no job of their own: each is an observation
+    * (`Dataset.observe`) on the frame that the stage's eager checkpoint
+    * materializes anyway, read when that action ends. The raw count is
+    * taken in the gate's own scan, before the gate drops a row; the
+    * token counts past the gate sum the `n_words` the gate computed.
     */
   def run(spark: SparkSession, sfDir: String,
           outDir: Option[String] = None): (Seq[(String, (Long, Long))], DataFrame) = {
     val docs = Tables.load(spark, sfDir, "documents")
-    def measure(df: DataFrame): (Long, Long) = {
-      val r = df
-        .select(count(lit(1)), sum(size(TextAnalysis.tokens(col("text")))))
-        .head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    val stages = Seq("raw", "quality", "deduped", "train").map(_ -> Observation())
+    val observed = stages.toMap
 
     // each stage is materialized once: the gate/dedup frames feed several
-    // downstream actions (measures, the split, packing, the write), and
-    // without the checkpoint every action re-runs the Gopher scan and the
-    // LSH clustering — the same multiple-consumer lesson as q39/q40
-    val keepQuality = TextAnalysis.gopherRules(docs)
-      .filter(col("keep") === 1).select("doc_id")
-    val quality = docs.join(keepQuality, "doc_id").localCheckpoint(true)
+    // downstream actions (the split, packing, the write), and without the
+    // checkpoint every action re-runs the Gopher scan and the LSH
+    // clustering — the same multiple-consumer lesson as q39/q40
+    val scanned = docs.withColumn("w", TextAnalysis.tokens(col("text")))
+      .observe(observed("raw"), count(lit(1)).as("d"), sum(size(col("w"))).as("t"))
+    val quality = materialize(
+      TextAnalysis.gopherGate(scanned).filter(col("keep") === 1)
+        .select((docs.columns.toSeq :+ "n_words").map(col): _*),
+      observed("quality"))
 
     val survivors = Dedup.resolveClusters(quality)
       .filter(col("keep") === 1).select("doc_id")
-    val deduped = quality.join(survivors, "doc_id").localCheckpoint(true)
+    val deduped = materialize(quality.join(survivors, "doc_id"), observed("deduped"))
 
     val split = TextAnalysis.trainValTest(deduped)
       .select(col("doc_id"), col("split"))
-    val withSplit = deduped.join(split, "doc_id").localCheckpoint(true)
+    val withSplit = materialize(deduped.join(split, "doc_id"), observed("train"),
+      col("split") === "train")
 
     val train = withSplit.filter(col("split") === "train")
     val packed = TextAnalysis.packSequences(train)
@@ -67,12 +73,31 @@ object CurationPipeline {
         .write.mode("overwrite").partitionBy("split").parquet(dir)
     }
 
-    val counts = Seq(
-      "raw" -> measure(docs),
-      "quality" -> measure(quality),
-      "deduped" -> measure(deduped),
-      "train" -> measure(train))
-    (counts, fin)
+    (stages.map { case (stage, o) => stage -> counted(o) }, fin)
+  }
+
+  /** `df` eagerly checkpointed, with `o` observing, in that same action,
+    * the rows where `in` holds and the sum of their `n_words`. The
+    * observation sits on top of the checkpointed plan, so it runs in the
+    * action's result stage, where each row is counted once even when a
+    * task is retried.
+    */
+  private def materialize(df: DataFrame, o: Observation,
+                          in: Column = lit(true)): DataFrame =
+    df.observe(o, count_if(in).as("d"), sum(when(in, col("n_words"))).as("t"))
+      .localCheckpoint(true)
+
+  /** An observation's (docs, tokens). A plan that needed no task (an
+    * empty input) reports no metrics, and a sum over no row is null:
+    * both read as 0.
+    */
+  private def counted(o: Observation): (Long, Long) = {
+    val m = o.get
+    def n(k: String): Long = m.get(k) match {
+      case Some(v: Long) => v
+      case _ => 0L
+    }
+    (n("d"), n("t"))
   }
 
   def main(args: Array[String]): Unit = {

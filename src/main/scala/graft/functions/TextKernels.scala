@@ -1,12 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The text kernels as static methods (the [[FnvHash]] convention): the
@@ -43,6 +44,34 @@ object TextKernels {
     var i = 0
     while (i < toks.length) { out(i) = UTF8String.fromString(toks(i)); i += 1 }
     new GenericArrayData(out)
+  }
+
+  /** The Gopher gate's counts over one document's tokens, in one pass with
+    * one hash map ([[GopherCounts]]): the token count, the letter-length
+    * sum (code points, as `length`), how many distinct `stopwords` occur,
+    * and how often the most frequent token occurs.
+    */
+  def gopherCounts(tokens: ArrayData, stopwords: java.util.Set[UTF8String]): InternalRow = {
+    val n = tokens.numElements()
+    val seen = new java.util.HashMap[UTF8String, Array[Int]](2 * n)
+    var letters = 0L
+    var nStop = 0
+    var top = 0
+    var i = 0
+    while (i < n) {
+      val t = tokens.getUTF8String(i)
+      letters += t.numChars()
+      var c = seen.get(t)
+      if (c == null) {
+        c = new Array[Int](1)
+        seen.put(t, c)
+        if (stopwords.contains(t)) nStop += 1
+      }
+      c(0) += 1
+      if (c(0) > top) top = c(0)
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](n, letters, nStop, top))
   }
 }
 
@@ -133,5 +162,40 @@ case class MinHashSignature(child: Expression) extends UnaryExpression {
       boolean ${ev.isNull} = ${ev.value} == null;""")
   }
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
+    copy(child = newChild)
+}
+
+/** Codegen'd Gopher counts ([[TextKernels.gopherCounts]]) of a token array,
+  * as a struct of `n_words`, `letters`, `n_stop` and `top_count`: one loop
+  * per row in place of the `aggregate`, `array_intersect(array_distinct …)`
+  * and `array_max(transform(… filter …))` lambdas, whose top-token count
+  * alone made one lambda call per (distinct token, token) pair.
+  */
+case class GopherCounts(child: Expression, stopwords: Seq[String]) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, false) => TypeCheckSuccess
+    case t => TypeCheckFailure(
+      s"$prettyName needs an array of non-null strings, not ${t.simpleString}")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_words", IntegerType, nullable = false),
+    StructField("letters", LongType, nullable = false),
+    StructField("n_stop", IntegerType, nullable = false),
+    StructField("top_count", IntegerType, nullable = false)))
+  override def prettyName: String = "gopher_counts"
+
+  @transient private lazy val stopSet: java.util.Set[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    stopwords.foreach(w => s.add(UTF8String.fromString(w)))
+    s
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    TextKernels.gopherCounts(input.asInstanceOf[ArrayData], stopSet)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sw = ctx.addReferenceObj("gopherStopwords", stopSet, "java.util.Set")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.gopherCounts($c, $sw)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
     copy(child = newChild)
 }

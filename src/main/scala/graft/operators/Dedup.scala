@@ -5,7 +5,7 @@ import graft.functions.{MinHash, MinHashSignature}
 import graft.functions.MinHash.{K, P, R}
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline: exact (hash
@@ -914,6 +914,17 @@ object Dedup {
       .select("a_id", "b_id", "est_jaccard", "jaccard")
   }
 
+  /** Release the block storage behind an eager localCheckpoint snapshot —
+    * label propagation supersedes one snapshot per iteration, and waiting
+    * for the ContextCleaner would pin every generation simultaneously. A
+    * superseded snapshot is never read again: no lineage WARN is due.
+    */
+  private def unpersistSnapshot(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        GraftShims.releaseBlocks(l.rdd)
+    }
+
   /** Duplicate-cluster resolution: connected components over the MinHash-LSH
     * candidate pairs, by iterative min-label propagation — the step a real
     * dedup pipeline runs AFTER pair generation, because near-duplication is
@@ -934,28 +945,38 @@ object Dedup {
     * on web corpora), and the loop stops as soon as an iteration changes
     * nothing.
     */
-  /** Release the block storage behind an eager localCheckpoint snapshot —
-    * the loop below supersedes one snapshot per iteration, and waiting for
-    * the ContextCleaner would pin every generation simultaneously. A
-    * superseded snapshot is never read again: no lineage WARN is due.
-    */
-  private def unpersistSnapshot(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        GraftShims.releaseBlocks(l.rdd)
-    }
-
   def duplicateClusters(docs: DataFrame, maxIters: Int = 20): DataFrame = {
     val pairs = minhashLshPairs(docs)
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
       .localCheckpoint(true)
-    // the loop iterates ONLY over nodes incident to a dup edge — a
-    // singleton's label can never change, so carrying the whole corpus
-    // through every iteration (as round 4-5 did) multiplies each
-    // iteration's join/checkpoint by corpus size for no information; on a
-    // real corpus the duplicate-involved subset is a small fraction.
+    // the edge checkpoint is released on every exit; on success the
+    // returned frame reads the final label snapshot, so its blocks stay
+    // pinned until the caller drops the frame (ContextCleaner)
+    val labels = try propagateLabels(edges, maxIters)
+      finally unpersistSnapshot(edges)
     // Singletons rejoin (left join, label := own id) once, at the end.
+    docs.select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+      .withColumn("is_rep", (col("doc_id") === col("cluster_id")).cast("int"))
+  }
+
+  /** Min-label propagation over `edges` (src, dst), which lists every
+    * edge in both directions: (doc_id, cluster_id) for each node incident
+    * to an edge, cluster_id being the minimum doc_id of its connected
+    * component. Throws when `maxIters` iterations do not converge.
+    *
+    * The loop iterates ONLY over nodes incident to an edge — a singleton's
+    * label can never change, so carrying the whole corpus through every
+    * iteration multiplies each iteration's join/checkpoint by corpus size
+    * for no information; on a real corpus the duplicate-involved subset is
+    * a small fraction. Each iteration's changed count is observed by the
+    * checkpoint action that materializes its labels, so convergence costs
+    * no job of its own.
+    */
+  private[graft] def propagateLabels(edges: DataFrame, maxIters: Int = 20): DataFrame = {
     // seed labels at min(self, direct neighbors) — the first propagation
     // step fused into initialization: pair-shaped clusters (the common
     // case) start CONVERGED, so the loop below runs once to verify and
@@ -965,31 +986,35 @@ object Dedup {
       .select(col("doc_id"),
         least(col("doc_id"), col("nbr_min")).as("cluster_id"))
       .localCheckpoint(true)
-    var labels = snapshot
     var changed = 1L
     var it = 0
-    // every exit — convergence or the non-convergence throw — releases the
-    // edge checkpoint and, on failure, the last label snapshot too; on
-    // success the RETURNED frame reads that final snapshot, so its blocks
-    // stay pinned until the caller drops the frame (ContextCleaner)
+    // a non-convergence throw releases the last label snapshot too
     try {
       while (changed > 0 && it < maxIters) {
         val nbrMin = edges
-          .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
+          .join(snapshot.withColumnRenamed("doc_id", "dst"), "dst")
           .groupBy(col("src").as("doc_id"))
           .agg(min(col("cluster_id")).as("nbr_min"))
-        val updated = labels.join(nbrMin, Seq("doc_id"), "left")
+        // the observation sits on top of the checkpointed plan, in the
+        // action's result stage: a retried map task cannot count twice
+        val chg = Observation()
+        val updated = snapshot.join(nbrMin, Seq("doc_id"), "left")
           .select(col("doc_id"),
             least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
               .as("cluster_id"),
             (coalesce(col("nbr_min"), col("cluster_id")) < col("cluster_id"))
               .as("chg"))
+          .observe(chg, count_if(col("chg")).as("n"))
+          .drop("chg")
           .localCheckpoint(true)
-        changed = updated.filter(col("chg")).count()
+        // an empty input can leave the plan with no metrics to report
+        changed = chg.get.get("n") match {
+          case Some(n: Long) => n
+          case _ => 0L
+        }
         // the new snapshot is materialized; the previous generation is dead
         unpersistSnapshot(snapshot)
         snapshot = updated
-        labels = updated.drop("chg")
         it += 1
       }
       // never hand back partially-propagated labels: a component with
@@ -1000,14 +1025,9 @@ object Dedup {
           "iterations — raise maxIters (components as deep as the iteration " +
           "count exist in the pair graph)")
     } finally {
-      unpersistSnapshot(edges)
       if (changed != 0) unpersistSnapshot(snapshot)
     }
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .withColumn("is_rep", (col("doc_id") === col("cluster_id")).cast("int"))
+    snapshot
   }
 
   /** Duplicate-cluster resolution POLICY — the decision step after

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.LetterTokens
+import graft.functions.{GopherCounts, LetterTokens}
 import graft.functions.hashes.portableHash60
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * column expressions over a `text` column (no UDFs), so they scale
   * embarrassingly: no shuffle at all — every score is computed in the scan
   * stage. Not all of it is compiled, though:
-  *  - the tokenizer [[tokens]] (and Dedup's MinHash signature) are
-  *    codegen'd kernels in `graft.functions` — one generated loop per row;
+  *  - the tokenizer [[tokens]], the [[gopherRules]] counts (and Dedup's
+  *    MinHash signature) are codegen'd kernels in `graft.functions` — one
+  *    generated loop per row;
   *  - the per-token statistics built from `filter`, `transform` and
   *    `aggregate` lambdas are higher-order functions, which Spark 4.1.2
   *    evaluates interpreted (`CodegenFallback`): one lambda call per array
@@ -1292,37 +1293,38 @@ object TextAnalysis {
     * keep = every rule passes. All signals are exact-integer or single
     * exact-int divisions, so flags AND signals hash-match the oracle.
     *
-    * The top-token ratio is computed per-row over the distinct-token list
-    * — O(len·distinct) inside the scan stage, zero shuffle, which is right
-    * for web-scale docs (≤ a few thousand tokens). For book-length inputs
-    * the explode + count twin ([[repetitionScores]]'s shape) bounds the
-    * per-row cost instead.
+    * The four counts behind the signals come from one codegen'd
+    * [[graft.functions.GopherCounts]] kernel: one pass over the tokens with
+    * one hash map per row, in the scan stage, zero shuffle.
     */
-  def gopherRules(docs: DataFrame): DataFrame = {
-    val sw = array(stopwords.map(lit): _*)
-    docs.withColumn("w", tokens(col("text")))
-      .filter(size(col("w")) > 0)
-      .withColumn("n_words", size(col("w")))
-      .withColumn("mean_wl",
-        aggregate(col("w"), lit(0), (a, x) => a + length(x)).cast("double")
-          / col("n_words"))
-      .withColumn("n_stop", size(array_intersect(array_distinct(col("w")), sw)))
-      .withColumn("top_ratio",
-        array_max(transform(array_distinct(col("w")),
-          t => size(filter(col("w"), x => x === t)))).cast("double")
-          / col("n_words"))
+  def gopherRules(docs: DataFrame): DataFrame =
+    gopherGate(docs.withColumn("w", tokens(col("text"))))
+      .select(col("doc_id"), col("n_words"), col("mean_wl"), col("n_stop"),
+        col("top_ratio"), col("r_wc"), col("r_mwl"), col("r_stop"),
+        col("r_rep"), col("keep"))
+
+  /** [[gopherRules]]' signals and flags appended to `tokenized`, whose `w`
+    * holds each row's tokens; rows without a token are dropped, `w` is
+    * dropped and every other input column is kept, so a pipeline can gate
+    * its documents in their own scan, with no join back to them.
+    */
+  private[graft] def gopherGate(tokenized: DataFrame): DataFrame =
+    tokenized.filter(size(col("w")) > 0)
+      .withColumn("g", GraftShims.column(
+        GopherCounts(GraftShims.expression(col("w")), stopwords)))
+      .withColumn("n_words", col("g.n_words"))
+      .withColumn("mean_wl", col("g.letters").cast("double") / col("n_words"))
+      .withColumn("n_stop", col("g.n_stop"))
+      .withColumn("top_ratio", col("g.top_count").cast("double") / col("n_words"))
       .withColumn("r_wc",
         (col("n_words") >= 50 && col("n_words") <= 1000).cast("int"))
       .withColumn("r_mwl",
         (col("mean_wl") >= 3.0 && col("mean_wl") <= 10.0).cast("int"))
       .withColumn("r_stop", (col("n_stop") >= 2).cast("int"))
       .withColumn("r_rep", (col("top_ratio") <= 0.2).cast("int"))
-      .select(col("doc_id"), col("n_words"), col("mean_wl"), col("n_stop"),
-        col("top_ratio"), col("r_wc"), col("r_mwl"), col("r_stop"),
-        col("r_rep"),
-        (col("r_wc") * col("r_mwl") * col("r_stop") * col("r_rep"))
-          .as("keep"))
-  }
+      .withColumn("keep",
+        col("r_wc") * col("r_mwl") * col("r_stop") * col("r_rep"))
+      .drop("g", "w")
 
   /** Deterministic train/val/test split (80/10/10): membership is a PURE
     * FUNCTION of the document id (portable-hash bucket mod 100), so the
@@ -1427,9 +1429,8 @@ object TextAnalysis {
     * products, the engine-portable stand-in for entropy (log stays out of
     * the oracle-checked path; Shannon fans apply −log downstream).
     *
-    * Scale shape: per-row over the distinct-token list (the
-    * [[gopherRules]] top-ratio trick — O(len·distinct) in the scan
-    * stage), zero shuffle.
+    * Scale shape: per-row over the distinct-token list — O(len·distinct)
+    * in the scan stage, zero shuffle.
     */
   def diversityScores(docs: DataFrame): DataFrame =
     docs.withColumn("w", tokens(col("text")))

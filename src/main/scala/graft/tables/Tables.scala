@@ -24,16 +24,17 @@ object Tables {
   // write-once; a pipeline re-reading a directory whose FILES change would
   // bypass this cache.)
   //
-  // Eviction: a stopped session's entries are dropped by an
-  // application-end listener registered on the session's first load — the
+  // Eviction: a stopped context's entries are dropped by an
+  // application-end listener registered on the context's first load — the
   // map must not strongly reference dead sessions forever in a driver
-  // that cycles sessions (test suites do). Sessions sharing one
+  // that cycles contexts (test suites do). Sessions sharing one
   // SparkContext via newSession() are evicted together at context end,
-  // which is when their plans die anyway.
+  // which is when their plans die anyway; one listener per context, not
+  // per session, so the listener bus does not grow with newSession().
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   private val hooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name (have: ${names.mkString(", ")})")
@@ -59,12 +60,13 @@ object Tables {
         spark.experimental.extraOptimizations ++=
           Seq(graft.plans.QuantizationPushdown)
     }
-    if (hooked.add(spark))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val sc = spark.sparkContext
+    if (hooked.add(sc))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          cache.keySet.removeIf(k => k._1 eq spark)
-          hooked.remove(spark)
+          cache.keySet.removeIf(k => k._1.sparkContext eq sc)
+          hooked.remove(sc)
         }
       })
     // scan creation is serialized per session: the events branch flips a

@@ -88,6 +88,49 @@ class CurationPipelineSpec extends AnyFunSuite {
     assert(idx.nonEmpty, "corpus phrase should match somewhere")
   }
 
+  test("a warm pass in a fresh session runs at most its measured job count") {
+    val sc = spark.sparkContext
+    // a local property, not a job group: a group's description would
+    // replace every action's call site
+    val tag = "graft.test.ratchet"
+    // a job is charged to the call site of the SQL action that started it,
+    // wherever it was submitted from; a job outside any action, to its own
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            actions.put(x.executionId.toString, x.description)
+          case _ =>
+        }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null))
+          jobs.add((String.valueOf(e.properties.getProperty("spark.sql.execution.id")),
+            e.stageInfos.maxBy(_.stageId).name))
+    }
+    // warm: JIT and the codegen cache
+    CurationPipeline.run(spark.newSession(), TestSpark.sf0001)
+    sc.addSparkListener(counter)
+    // every job a pass starts, also from the broadcast and shuffle-stage
+    // threads, carries the local properties of the thread that called run
+    sc.setLocalProperty(tag, "on")
+    try CurationPipeline.run(spark.newSession(), TestSpark.sf0001)
+    finally {
+      sc.setLocalProperty(tag, null)
+      TestSpark.drainBus(sc)
+      sc.removeSparkListener(counter)
+    }
+    val bySite = jobs.toArray.toSeq.map {
+      case (exec: String, stage: String) => Option(actions.get(exec)).getOrElse(stage)
+    }.groupBy(identity).map { case (site, js) => s"${js.size} $site" }.toSeq.sorted
+    bySite.foreach(info(_))
+    // measured when the stage counts moved into the checkpoint actions;
+    // the pass before ran 41 jobs. A change that adds a job to the pass
+    // raises this bound and says why.
+    assert(jobs.size <= 27, s"${jobs.size} jobs: ${bySite.mkString("; ")}")
+  }
+
   /** Classes codegen compiled while `f` ran (cache misses, JVM-wide). */
   private def compiled(f: => Any): Long = {
     val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

@@ -313,6 +313,23 @@ class DedupSpec extends AnyFunSuite {
     assert(clusters.length === docs.count())
   }
 
+  test("label propagation: a six-node path converges to one label; " +
+    "no edge, no row") {
+    import spark.implicits._
+    // 1–2–3–4–5–6, every edge in both directions
+    val path = (1L to 5L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("src", "dst")
+    val labels = Dedup.propagateLabels(path).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels === (1L to 6L).map(_ -> 1L).toMap)
+    // the seed already takes each node's direct neighbors: node 6 is four
+    // hops further from 1, so one iteration cannot converge
+    val e = intercept[IllegalArgumentException](
+      Dedup.propagateLabels(path, maxIters = 1))
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+    assert(Dedup.propagateLabels(path.filter(lit(false))).count() === 0)
+  }
+
   test("duplicate clusters: a warm call keeps only the final label snapshot") {
     val sc = spark.sparkContext
     Dedup.duplicateClusters(docs).count() // warms the memoized LSH pairs

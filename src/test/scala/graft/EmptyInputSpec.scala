@@ -40,6 +40,16 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(e.getMessage.contains("empty"), e.getMessage)
   }
 
+  test("the curation pipeline on an empty corpus: four (0, 0) stages, " +
+    "an empty final frame") {
+    val dir = TestSpark.tempDir("graft-empty-curation").toString
+    noDocs.write.parquet(s"$dir/documents.parquet")
+    val (counts, fin) = graft.examples.CurationPipeline.run(spark, dir)
+    assert(counts === Seq("raw", "quality", "deduped", "train").map(_ -> ((0L, 0L))))
+    assert(fin.count() === 0)
+    assert(fin.columns.toSeq === Seq("doc_id", "source", "split", "seq_id"))
+  }
+
   test("scan-stage text operators return empty frames, schema intact") {
     for ((name, df) <- Seq(
       "tokenStats" -> TextAnalysis.tokenStats(noDocs),

@@ -44,4 +44,29 @@ class MemoSpec extends AnyFunSuite {
       assert(!runs(1).contains("sig"), "warm run re-MinHashed the corpus")
     } finally Memo.evict(Memo.keysOf(s))
   }
+
+  test("memo builds and table loads register one listener per context, " +
+    "not one per session") {
+    val sc = TestSpark.spark.sparkContext
+    def listeners(): Seq[String] = {
+      TestSpark.drainBus(sc)
+      TestSpark.busListeners(sc).map(_.getClass.getName)
+    }
+    def build(): Unit = {
+      val s = TestSpark.spark.newSession()
+      val docs = graft.tables.Tables.load(s, TestSpark.sf0001, "documents")
+      try Memo("listener-probe", docs)(docs.select("doc_id").limit(1)).count()
+      finally Memo.evict(Memo.keysOf(s))
+    }
+    build()
+    val one = listeners()
+    build(); build()
+    val three = listeners()
+    // Spark's own per-session listeners leave the bus when the context
+    // cleaner collects their session, at a time the GC sets: the bus may
+    // shrink, and ours must stay as they were
+    def ours(ls: Seq[String]) = ls.filter(_.startsWith("graft.")).sorted
+    assert(ours(three) === ours(one))
+    assert(three.size <= one.size, s"${one.mkString(", ")} -> ${three.mkString(", ")}")
+  }
 }

@@ -51,6 +51,25 @@ object TestSpark {
     d
   }
 
+  /** The context's listener bus; Spark keeps it private, so it is reached
+    * through its public bytecode accessor.
+    */
+  private def bus(sc: org.apache.spark.SparkContext): AnyRef =
+    classOf[org.apache.spark.SparkContext].getMethod("listenerBus").invoke(sc)
+
+  /** The listeners registered on the context's bus. */
+  def busListeners(sc: org.apache.spark.SparkContext): Seq[AnyRef] = {
+    val b = bus(sc)
+    b.getClass.getMethod("listeners").invoke(b)
+      .asInstanceOf[java.util.List[AnyRef]].toArray.toSeq
+  }
+
+  /** Returns once every event posted so far has reached every listener. */
+  def drainBus(sc: org.apache.spark.SparkContext): Unit = {
+    val b = bus(sc)
+    b.getClass.getMethod("waitUntilEmpty").invoke(b)
+  }
+
   /** A Gutenberg-style corpus for MR parity tests: each documents-table row
     * becomes one (fileName, contents) whole file.
     */
