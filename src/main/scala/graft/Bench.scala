@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import graft.core.Memo
+import graft.core.{LocalFs, Memo}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver-run): times every SparkEntry query on
@@ -13,25 +13,35 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** THE bench-shaped session (SPARK_GRAFT_CPUS cores, default every
-    * available processor; shuffle=cpus, AQE, UTC, no UI, [[CodegenConf]])
-    * — one definition, so Verify, the probes (graft.tools.Probe), the
-    * audit and `CurationPipeline.main` run under exactly the configuration
-    * the official bench runs.
+    * available processor) — one definition, so Verify, the probes
+    * (graft.tools.Probe), the audit and `CurationPipeline.main` run under
+    * exactly the configuration the official bench runs. Its settings
+    * ([[sessionConf]]):
+    *  - shuffle partitions = cpus, AQE on, UTC, no UI;
+    *  - [[CodegenConf]]: each generated class compiles once per JVM;
+    *  - [[graft.core.LocalFs.Conf]]: `file:` writes, renames and stream
+    *    checkpoints fork no `chmod` or `readlink` process;
+    *  - `spark.local.dir` on [[scratchDir]] when there is one.
     */
   def session(appName: String = "graft-bench"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val b = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(CodegenConf)
-    scratchDir.foreach(d => b.config("spark.local.dir", d))
-    b.getOrCreate()
+      .config(sessionConf(cpus))
+      .getOrCreate()
   }
+
+  /** The settings [[session]] applies on `cpus` cores. */
+  private[graft] def sessionConf(cpus: String): Map[String, Any] =
+    Map(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.adaptive.enabled" -> true,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> false) ++
+      CodegenConf ++ LocalFs.Conf ++
+      scratchDir.map("spark.local.dir" -> _)
 
   /** Generated classes the codegen cache holds. Static: Spark reads it
     * once, from the session active when `CodeGenerator` is first used in

@@ -1,6 +1,6 @@
 package graft.examples
 
-import graft.core.{MapReduceJob, MrApp}
+import graft.core.{LocalFs, MapReduceJob, MrApp}
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point mirroring the reference's `mrcoordinator app.so pg*.txt`
@@ -19,8 +19,7 @@ object MrRun {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .appName(s"graft-mr-$appName")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val job = MapReduceJob(app, nReduce)
@@ -28,4 +27,9 @@ object MrRun {
     println(s"[MrRun] $appName done -> $outDir")
     spark.stop()
   }
+
+  /** The settings the CLI's session is built with. */
+  private[graft] val conf: Map[String, Any] = Map(
+    "spark.sql.shuffle.partitions" -> 8,
+    "spark.ui.enabled" -> false) ++ LocalFs.Conf
 }

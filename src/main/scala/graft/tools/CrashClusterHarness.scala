@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.apps.Apps
-import graft.core.{KV, MapReduceJob, MrApp}
+import graft.core.{KV, LocalFs, MapReduceJob, MrApp}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
@@ -104,10 +104,7 @@ object CrashClusterHarness {
     val spark = SparkSession.builder()
       .master("local-cluster[2,2,1024]")
       .appName("graft-crash-cluster")
-      .config("spark.executor.extraClassPath", cp)
-      .config("spark.task.maxFailures", "8")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+      .config(conf(cp))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -115,6 +112,15 @@ object CrashClusterHarness {
     spark.stop()
     println("CRASH_CLUSTER_PARITY_OK " + outcomes.mkString(" "))
   }
+
+  /** The cluster session's settings; `classPath` is the executors'. The
+    * executors load [[LocalFs]]'s classes from it.
+    */
+  private[graft] def conf(classPath: String): Map[String, Any] = Map(
+    "spark.executor.extraClassPath" -> classPath,
+    "spark.task.maxFailures" -> 8,
+    "spark.sql.shuffle.partitions" -> 4,
+    "spark.ui.enabled" -> false) ++ LocalFs.Conf
 
   /** One job + one phase-targeted executor SIGKILL; exits the JVM on any
     * failed assertion (codes in the object doc). Returns the per-phase

@@ -260,6 +260,18 @@ class BenchContractSpec extends AnyFunSuite {
     assert(!out.toString("UTF-8").contains("[bench]"), "stdout is the contract")
   }
 
+  test("every session builder applies the one file-system conf") {
+    // one constant, so a builder cannot fall back to the forking stock
+    // local filesystem by carrying an old copy of the settings
+    val builders = Map(
+      "Bench.session" -> Bench.sessionConf("4"),
+      "TestSpark" -> TestSpark.conf,
+      "MrRun" -> graft.examples.MrRun.conf,
+      "CrashClusterHarness" -> graft.tools.CrashClusterHarness.conf("cp"))
+    for ((name, conf) <- builders; (k, v) <- graft.core.LocalFs.Conf)
+      assert(conf.get(k).contains(v), s"$name does not set $k")
+  }
+
   test("driver contract consistency: every oracle names a query; rows-only set pinned") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet

@@ -6,25 +6,29 @@ import org.apache.spark.sql.SparkSession
   * with task maxFailures 2, so fault-injection tests can exercise Spark's
   * task retry (the engine's replacement for the reference's 10 s straggler
   * preemption, src/mr/rpc.go:79-98) while normal tests are unaffected.
-  * Codegen runs under the bench session's settings (Bench.CodegenConf).
+  * Codegen and the `file:` filesystem are the bench session's
+  * (Bench.CodegenConf, graft.core.LocalFs.Conf).
   */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8,2]")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", tempDir("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .config(graft.Bench.CodegenConf)
-      // RAM-backed shuffle scratch when available (see Bench.scratchDir)
-      .config("spark.local.dir",
-        graft.Bench.scratchDir.getOrElse("/tmp"))
+      .config(conf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The settings the shared session is built with. */
+  lazy val conf: Map[String, Any] = Map(
+    "spark.sql.shuffle.partitions" -> 8,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.warehouse.dir" -> tempDir("graft-warehouse").toString,
+    "spark.ui.enabled" -> false,
+    // RAM-backed shuffle scratch when available (see Bench.scratchDir)
+    "spark.local.dir" -> graft.Bench.scratchDir.getOrElse("/tmp")) ++
+    graft.Bench.CodegenConf ++ graft.core.LocalFs.Conf
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
