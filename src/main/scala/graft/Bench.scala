@@ -128,26 +128,8 @@ object Bench {
       } ++ rerun("_st_harness_floor", rr)(
         graft.streaming.EventStream.harnessFloorProbe(spark, sfDir))
 
-    // env-gated per-entry diagnostic (SPARK_GRAFT_BENCH_DIAG=1, stderr
-    // only — the stdout contract line is untouched): cached-RDD count,
-    // storage bytes and cumulative driver GC time after each entry, to
-    // correlate late-run per-entry inflation with cache/GC pressure.
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").exists(_.nonEmpty)
-    def diagLine(name: String, secs: Double): Unit = if (diag) {
-      import scala.jdk.CollectionConverters._
-      val gcMs = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-      val infos = spark.sparkContext.getRDDStorageInfo
-      System.err.println(
-        f"[diag] $name%-28s ${secs}%7.2f s  rdds=${infos.length}%3d " +
-          f"mem=${infos.map(_.memSize).sum / 1e6}%.0fMB " +
-          f"disk=${infos.map(_.diskSize).sum / 1e6}%.0fMB gc=${gcMs}ms")
-    }
-
     val results = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val rows = rerun(name, rr)(fn(spark, sfDir).count())
-      rows.foreach { case (n, secs, _) => diagLine(n, secs) }
-      rows
+      rerun(name, rr)(fn(spark, sfDir).count())
     }
     val all = overhead ++ results
     writeFullRecord(all, sfDir)

@@ -591,11 +591,6 @@ object Dedup {
       lshPairsFromSignatures(minhashSignatures(docs))
     }
 
-  /** Band-pair generation over an already-built signature frame — shared
-    * so callers that also need the signatures (estimation) or shingles
-    * reuse ONE lineage instead of re-tokenizing per consumer (identical
-    * subtrees also let Spark's exchange reuse dedupe the shuffle).
-    */
   /** (doc_id, band, bkey) band buckets of a wide signature frame. */
   private[graft] def bandsOf(sig: DataFrame): DataFrame = {
     val bandCols = (0 until K / R).map { j =>
@@ -609,6 +604,11 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
   }
 
+  /** Band-pair generation over an already-built signature frame — shared
+    * so callers that also need the signatures (estimation) or shingles
+    * reuse ONE lineage instead of re-tokenizing per consumer (identical
+    * subtrees also let Spark's exchange reuse dedupe the shuffle).
+    */
   private def lshPairsFromSignatures(sig: DataFrame): DataFrame = {
     val bands = bandsOf(sig)
     val a = bands.as("a")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.TextAnalysis
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +13,8 @@ import org.apache.spark.sql.functions._
   * reference, src/mrapps/wc.go:27-31, shuffled as one (word, values) row per
   * file).
   *
-  * Tokenizer: Java regex `[^\p{L}]+` ≡ Go FieldsFunc(!unicode.IsLetter)
+  * Tokenizer: [[TextAnalysis.tokens]], the codegen'd letter-run kernel ≡
+  * Java regex `[^\p{L}]+` ≡ Go FieldsFunc(!unicode.IsLetter)
   * (property-tested in TokenizerProp); empty tokens dropped like Go
   * FieldsFunc.
   */
@@ -27,8 +29,7 @@ object MrQueries {
   private def words(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
-        explode(split(col("text"), "[^\\p{L}]+")).as("word"))
-      .filter(length(col("word")) > 0)
+        explode(TextAnalysis.tokens(col("text"))).as("word"))
 
   /** Word count (src/mrapps/wc.go) — groupBy(word).count() gets map-side
     * partial aggregation: at 100 TB each executor pre-counts its split and

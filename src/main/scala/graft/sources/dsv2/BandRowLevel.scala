@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
@@ -80,8 +80,8 @@ class BandRowLevelOperation(path: String, cmd: Command, conf: Configuration)
     }
 }
 
-/** The rewrite scan's builder: the same file-aligned pushdown discipline
-  * as the read path ([[BandScanBuilder]]) — band predicates prune whole
+/** The rewrite scan's builder: the same file-aligned pushdown rule as
+  * the read path ([[BandPruning]]) — band predicates prune whole
   * files exactly, doc_id bounds skip via the manifest's per-file stats —
   * but file-level ONLY: a group-based rewrite must see EVERY row of an
   * admitted file (survivors are written back), so nothing here may drop
@@ -94,36 +94,21 @@ class BandRewriteScanBuilder(path: String, conf: Configuration,
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  private var pushedBandFilters: Array[Filter] = Array.empty
-  private var docSkipFilters: Array[Filter] = Array.empty
+  private var pruning = BandPruning.All
   private var required: StructType = BandStore.Schema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (bands, rest) = filters.partition {
-      case EqualTo("band", _: Int) => true
-      case In("band", vs) => vs.forall(_.isInstanceOf[Int])
-      case _ => false
-    }
-    pushedBandFilters = bands
-    docSkipFilters = rest.filter {
-      case EqualTo("doc_id", _: java.lang.Number) => true
-      case GreaterThan("doc_id", _: java.lang.Number) => true
-      case GreaterThanOrEqual("doc_id", _: java.lang.Number) => true
-      case LessThan("doc_id", _: java.lang.Number) => true
-      case LessThanOrEqual("doc_id", _: java.lang.Number) => true
-      case _ => false
-    }
+    val (p, rest) = BandPruning.push(filters)
+    pruning = p
     rest
   }
-  override def pushedFilters(): Array[Filter] =
-    pushedBandFilters ++ docSkipFilters
+  override def pushedFilters(): Array[Filter] = pruning.pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def build(): Scan =
-    new BandRewriteScan(path, conf, pushedBandFilters, docSkipFilters,
-      required, op)
+    new BandRewriteScan(path, conf, pruning, required, op)
 }
 
 /** Plans the affected-file partitions for a copy-on-write rewrite and
@@ -133,28 +118,11 @@ class BandRewriteScanBuilder(path: String, conf: Configuration,
   * and shrinks the replaced set to files that actually hold matching
   * rows.
   */
-class BandRewriteScan(path: String, conf: Configuration,
-                      pushed: Array[Filter], docSkip: Array[Filter],
+class BandRewriteScan(path: String, conf: Configuration, pruning: BandPruning,
                       required: StructType, op: BandRowLevelOperation)
     extends Scan with Batch with SupportsRuntimeV2Filtering {
 
   override def readSchema(): StructType = required
-
-  private def bandAdmitted(band: Int): Boolean = pushed.forall {
-    case EqualTo("band", v: Int) => band == v
-    case In("band", vs) => vs.contains(band)
-    case _ => true
-  }
-
-  private def docAdmitted(e: BandStore.ManifestEntry): Boolean = docSkip.forall {
-    case EqualTo("doc_id", v: java.lang.Number) =>
-      e.minDoc <= v.longValue && v.longValue <= e.maxDoc
-    case GreaterThan("doc_id", v: java.lang.Number) => e.maxDoc > v.longValue
-    case GreaterThanOrEqual("doc_id", v: java.lang.Number) => e.maxDoc >= v.longValue
-    case LessThan("doc_id", v: java.lang.Number) => e.minDoc < v.longValue
-    case LessThanOrEqual("doc_id", v: java.lang.Number) => e.minDoc <= v.longValue
-    case _ => true
-  }
 
   override def filterAttributes(): Array[NamedReference] =
     Array(Expressions.column("_file"))
@@ -196,14 +164,11 @@ class BandRewriteScan(path: String, conf: Configuration,
   private lazy val allEntries =
     BandStore.readManifest(new Path(path), conf)
   private def kept = allEntries.filter(e =>
-    bandAdmitted(e.band) && docAdmitted(e) &&
-      runtimeFileSet.forall(_.contains(e.name)))
+    pruning.admits(e) && runtimeFileSet.forall(_.contains(e.name)))
 
   override def description(): String = {
     val k = kept
-    s"graft-bands REWRITE path=$path " +
-      s"PushedBandFilters=${pushed.mkString("[", ",", "]")} " +
-      s"DocSkipFilters=${docSkip.mkString("[", ",", "]")} " +
+    s"graft-bands REWRITE path=$path ${pruning.describe} " +
       s"runtimeFiles=${runtimeFileSet.fold("all")(_.size.toString)} " +
       s"files=${k.size}/${allEntries.size}"
   }
@@ -241,9 +206,7 @@ class BandReplaceDataWrite(path: String, inputSchema: StructType,
     new BandWriterFactory(path, inputSchema, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.toSeq.flatMap {
-      case BandCommitMessage(files) => files
-    }
+    val committed = BandCommitMessage.filesOf(messages)
     val root = new Path(path)
     val hconf = conf.value
     val (prior, epochs) = BandStore.readManifestFull(root, hconf)
@@ -259,13 +222,6 @@ class BandReplaceDataWrite(path: String, inputSchema: StructType,
       prior.filterNot(e => replaced.contains(e.name)) ++ committed, epochs)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val f = BandStore.fs(root, conf.value)
-    messages.foreach {
-      case BandCommitMessage(files) =>
-        files.foreach(e => f.delete(new Path(root, e.name), false))
-      case _ =>
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    BandCommitMessage.abort(path, conf.value, messages)
 }

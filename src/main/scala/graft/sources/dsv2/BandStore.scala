@@ -170,6 +170,18 @@ object BandStore {
     publish(new Path(root, ManifestFile))
     next
   }
+
+  /** How a failed write deletes its files: a task's abort, every band
+    * write's driver-side abort and a replayed streaming epoch's duplicate
+    * attempt all end here. The files were never published, so no
+    * manifest version names them; anything published is reclaimed only
+    * by [[BandStoreMaintenance.vacuum]].
+    */
+  private[dsv2] def discard(root: Path, conf: Configuration,
+                            names: Iterable[String]): Unit = {
+    val f = fs(root, conf)
+    names.foreach(n => f.delete(new Path(root, n), false))
+  }
 }
 
 /** Store maintenance: the epoch-append write path accumulates one file
@@ -228,24 +240,14 @@ object BandStoreMaintenance {
         org.apache.spark.sql.functions.col("doc_id"))
     val written = routed
       .mapPartitions { it =>
-        val f = BandStore.fs(new Path(path), sconf.value)
-        val open = mutable.Map.empty[Int, BandFileStats]
+        val files = new BandFileRouter(new Path(path), sconf.value,
+          band => s"b$band-compact-${UUID.randomUUID()}.gsb")
         it.foreach { row =>
-          val band = row.getInt(row.fieldIndex("band"))
-          val st = open.getOrElseUpdate(band, {
-            val name = s"b$band-compact-${UUID.randomUUID()}.gsb"
-            new BandFileStats(name, new OutputStreamWriter(
-              f.create(new Path(new Path(path), name), false),
-              StandardCharsets.UTF_8))
-          })
-          st.record(row.getLong(row.fieldIndex("doc_id")),
+          files.write(row.getInt(row.fieldIndex("band")),
+            row.getLong(row.fieldIndex("doc_id")),
             row.getString(row.fieldIndex("bkey")))
         }
-        open.values.foreach(_.writer.close())
-        open.iterator.map { case (band, st) =>
-          st.entry(band,
-            f.getFileStatus(new Path(new Path(path), st.name)).getLen)
-        }
+        files.commit().iterator
       }.collect().toSeq // O(bands) rows — driver-adjacent by construction
     val (current, epochs) = BandStore.readManifestFull(root, conf)
     require(current.map(_.name).toSet == snapshot.map(_.name).toSet,
@@ -466,11 +468,7 @@ class BandStoreTable(path: String, pinnedVersion: Option[Long] = None)
     * is what steers Spark there instead of a wrong metadata drop.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall {
-      case EqualTo("band", _: Int) => true
-      case In("band", vs) => vs.forall(_.isInstanceOf[Int])
-      case _ => false
-    }
+    filters.forall(BandPruning.isBandFilter)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(pinnedVersion.isEmpty,
@@ -478,20 +476,85 @@ class BandStoreTable(path: String, pinnedVersion: Option[Long] = None)
     require(canDeleteWhere(filters),
       s"graft-bands: only file-aligned band predicates delete without a " +
         s"rewrite; got ${filters.mkString(", ")}")
-    def admits(band: Int): Boolean = filters.forall {
-      case EqualTo("band", v: Int) => band == v
-      case In("band", vs) => vs.contains(band)
-      case _ => true
-    }
+    val dropped = BandPruning(filters, Array.empty)
     val root = new Path(path)
     val conf = hconf
     val (entries, epochs) = BandStore.readManifestFull(root, conf)
     BandStore.writeManifest(root, conf,
-      entries.filterNot(e => admits(e.band)), epochs)
+      entries.filterNot(dropped.admits), epochs)
   }
 }
 
 // ---------------------------------------------------------------- read side
+
+/** The store's one file-pruning rule: which pushed filters the file
+  * layout answers, and which manifest files they admit. Every reader of
+  * the manifest — batch scan, micro-batch stream, metadata aggregate,
+  * copy-on-write rewrite scan, band delete — prunes through it.
+  *
+  * `bands` are `band = k` / `band IN (...)` predicates: the band names
+  * the file, so they prune whole files exactly with no false drops.
+  * `docSkip` are doc_id range/equality predicates, SKIP hints off the
+  * manifest's per-file doc_id min/max (parquet-footer-style data
+  * skipping, driver-side): a file whose recorded range cannot satisfy
+  * one is never opened. Conservative by construction — overlap keeps the
+  * file, and Spark re-evaluates the predicate on its rows.
+  */
+case class BandPruning(bands: Array[Filter], docSkip: Array[Filter]) {
+  import BandPruning._
+
+  /** What the scan builders report as `pushedFilters()`. */
+  def pushed: Array[Filter] = bands ++ docSkip
+
+  def admits(e: BandStore.ManifestEntry): Boolean =
+    bands.forall(f => bandTest(f).forall(_(e.band))) &&
+      docSkip.forall(f => docTest(f).forall(_(e)))
+
+  /** This pruning plus the band filters among runtime (DPP) filters;
+    * runtime doc_id sets would need row reads and are declined.
+    */
+  def withRuntime(filters: Array[Filter]): BandPruning =
+    copy(bands = bands ++ filters.filter(isBandFilter))
+
+  def describe: String =
+    s"PushedBandFilters=${bands.mkString("[", ",", "]")} " +
+      s"DocSkipFilters=${docSkip.mkString("[", ",", "]")}"
+}
+
+object BandPruning {
+  val All: BandPruning = BandPruning(Array.empty, Array.empty)
+
+  /** Splits pushed filters into the pruning they give and the filters
+    * Spark must still evaluate on rows. Band predicates are fully
+    * absorbed, so Spark need not re-check them. doc_id predicates are
+    * kept as skip hints but also returned — a surviving file still holds
+    * rows on both sides of the bound. Anything else (bkey predicates,
+    * other shapes) is purely post-scan.
+    */
+  def push(filters: Array[Filter]): (BandPruning, Array[Filter]) = {
+    val (bands, rest) = filters.partition(isBandFilter)
+    (BandPruning(bands, rest.filter(docTest(_).isDefined)), rest)
+  }
+
+  def isBandFilter(f: Filter): Boolean = bandTest(f).isDefined
+
+  private def bandTest(f: Filter): Option[Int => Boolean] = f match {
+    case EqualTo("band", v: Int) => Some(_ == v)
+    case In("band", vs) if vs.forall(_.isInstanceOf[Int]) => Some(b => vs.contains(b))
+    case _ => None
+  }
+
+  private def docTest(f: Filter): Option[BandStore.ManifestEntry => Boolean] =
+    f match {
+      case EqualTo("doc_id", v: java.lang.Number) =>
+        Some(e => e.minDoc <= v.longValue && v.longValue <= e.maxDoc)
+      case GreaterThan("doc_id", v: java.lang.Number) => Some(_.maxDoc > v.longValue)
+      case GreaterThanOrEqual("doc_id", v: java.lang.Number) => Some(_.maxDoc >= v.longValue)
+      case LessThan("doc_id", v: java.lang.Number) => Some(_.minDoc < v.longValue)
+      case LessThanOrEqual("doc_id", v: java.lang.Number) => Some(_.minDoc <= v.longValue)
+      case _ => None
+    }
+}
 
 class BandScanBuilder(path: String, conf: Configuration,
                       version: Option[Long] = None)
@@ -499,43 +562,23 @@ class BandScanBuilder(path: String, conf: Configuration,
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN {
 
-  private var pushedBandFilters: Array[Filter] = Array.empty
-  private var docSkipFilters: Array[Filter] = Array.empty
+  private var pruning = BandPruning.All
   private var residual: Array[Filter] = Array.empty
   private var required: StructType = BandStore.Schema
   private var aggPushed: Option[BandAggregate] = None
   private var limitN: Option[Int] = None
   private var topN: Option[(Boolean, Int)] = None
 
-  /** Accept (fully absorb) band predicates the file layout can answer
-    * exactly — `band = k` and `band IN (...)` prune to the named bands'
-    * files with no false drops, so Spark need not re-check them. doc_id
-    * range/equality predicates are kept as SKIP hints (the manifest's
-    * per-file min/max prunes non-overlapping files) but returned for
-    * Spark to re-evaluate — a surviving file still holds rows on both
-    * sides of the bound. Anything else (bkey predicates, other shapes)
-    * is purely post-scan.
+  /** Absorbs what the file layout answers ([[BandPruning.push]]); the
+    * rest, doc_id skip hints included, is the residual Spark evaluates.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (bands, rest) = filters.partition {
-      case EqualTo("band", _: Int) => true
-      case In("band", vs) => vs.forall(_.isInstanceOf[Int])
-      case _ => false
-    }
-    pushedBandFilters = bands
-    docSkipFilters = rest.filter {
-      case EqualTo("doc_id", _: java.lang.Number) => true
-      case GreaterThan("doc_id", _: java.lang.Number) => true
-      case GreaterThanOrEqual("doc_id", _: java.lang.Number) => true
-      case LessThan("doc_id", _: java.lang.Number) => true
-      case LessThanOrEqual("doc_id", _: java.lang.Number) => true
-      case _ => false
-    }
+    val (p, rest) = BandPruning.push(filters)
+    pruning = p
     residual = rest
     rest
   }
-  override def pushedFilters(): Array[Filter] =
-    pushedBandFilters ++ docSkipFilters
+  override def pushedFilters(): Array[Filter] = pruning.pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -599,15 +642,14 @@ class BandScanBuilder(path: String, conf: Configuration,
 
   override def build(): Scan = aggPushed match {
     case Some(agg) =>
-      new BandAggregateScan(path, conf, pushedBandFilters, version, agg)
+      new BandAggregateScan(path, conf, pruning, version, agg)
     case None =>
-      new BandScan(path, conf, pushedBandFilters, docSkipFilters,
-        required, version, limitN, topN)
+      new BandScan(path, conf, pruning, required, version, limitN, topN)
   }
 }
 
-class BandScan(path: String, conf: Configuration, pushed: Array[Filter],
-               docSkip: Array[Filter], required: StructType,
+class BandScan(path: String, conf: Configuration, pruning: BandPruning,
+               required: StructType,
                version: Option[Long] = None,
                limitN: Option[Int] = None,
                topN: Option[(Boolean, Int)] = None)
@@ -644,48 +686,21 @@ class BandScan(path: String, conf: Configuration, pushed: Array[Filter],
     * band predicate. `band` is the one attribute file pruning can answer
     * exactly; runtime doc_id sets would need row reads and are declined.
     */
-  private var runtimeBandFilters: Array[Filter] = Array.empty
+  private var admitting: BandPruning = pruning
 
   override def filterAttributes(): Array[NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("band"))
 
   override def filter(filters: Array[Filter]): Unit =
-    runtimeBandFilters = filters.filter {
-      case EqualTo("band", _) => true
-      case In("band", _) => true
-      case _ => false
-    }
+    admitting = pruning.withRuntime(filters)
 
-  private def bandAdmitted(band: Int): Boolean =
-    (pushed ++ runtimeBandFilters).forall {
-      case EqualTo("band", v: Int) => band == v
-      case In("band", vs) => vs.contains(band)
-      case _ => true
-    }
-
-  /** File-level data skipping off the manifest's doc_id min/max: a file
-    * whose recorded range cannot satisfy a pushed doc_id predicate is
-    * never opened. Conservative by construction — overlap keeps the
-    * file, and Spark re-evaluates the predicate on its rows.
-    */
-  private def docAdmitted(e: BandStore.ManifestEntry): Boolean = docSkip.forall {
-    case EqualTo("doc_id", v: java.lang.Number) =>
-      e.minDoc <= v.longValue && v.longValue <= e.maxDoc
-    case GreaterThan("doc_id", v: java.lang.Number) => e.maxDoc > v.longValue
-    case GreaterThanOrEqual("doc_id", v: java.lang.Number) => e.maxDoc >= v.longValue
-    case LessThan("doc_id", v: java.lang.Number) => e.minDoc < v.longValue
-    case LessThanOrEqual("doc_id", v: java.lang.Number) => e.minDoc <= v.longValue
-    case _ => true
-  }
-
+  private lazy val allEntries =
+    BandStore.readManifest(new Path(path), conf, version)
   // NOT a lazy val: runtime filters arrive AFTER the initial planning
   // forced the statistics/description, and BatchScanExec re-invokes
   // planInputPartitions post-filter — the admitted set must re-evaluate
-  private lazy val allEntries =
-    BandStore.readManifest(new Path(path), conf, version)
   private def kept = {
-    val admitted =
-      allEntries.filter(e => bandAdmitted(e.band) && docAdmitted(e))
+    val admitted = allEntries.filter(admitting.admits)
     (topN, limitN) match {
       case (Some((asc, n)), _) =>
         // the n-th extreme doc_id is bounded by the minimal file prefix
@@ -721,8 +736,7 @@ class BandScan(path: String, conf: Configuration, pushed: Array[Filter],
       s" PushedTopN=doc_id ${if (asc) "ASC" else "DESC"},$n"
     }.getOrElse("")
     s"graft-bands path=$path version=${version.getOrElse("current")} " +
-      s"PushedBandFilters=${pushed.mkString("[", ",", "]")} " +
-      s"DocSkipFilters=${docSkip.mkString("[", ",", "]")}$lim$top " +
+      s"${pruning.describe}$lim$top " +
       s"bands=${bands.mkString("[", ",", "]")} files=${kept.size}/$total"
   }
 
@@ -752,7 +766,7 @@ class BandScan(path: String, conf: Configuration, pushed: Array[Filter],
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new BandMicroBatchStream(path, conf, pushed, docSkip, required)
+    new BandMicroBatchStream(path, conf, pruning, required)
 }
 
 /** The versioned manifest doubles as a STREAM LOG: every commit IS an
@@ -772,27 +786,11 @@ class BandScan(path: String, conf: Configuration, pushed: Array[Filter],
   * as Delta does with its `ignoreChanges` family of escapes.
   */
 class BandMicroBatchStream(path: String, conf: Configuration,
-                           pushed: Array[Filter], docSkip: Array[Filter],
-                           required: StructType)
+                           pruning: BandPruning, required: StructType)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private val root = new Path(path)
-
-  private def bandAdmitted(band: Int): Boolean = pushed.forall {
-    case EqualTo("band", v: Int) => band == v
-    case In("band", vs) => vs.contains(band)
-    case _ => true
-  }
-  private def docAdmitted(e: BandStore.ManifestEntry): Boolean = docSkip.forall {
-    case EqualTo("doc_id", v: java.lang.Number) =>
-      e.minDoc <= v.longValue && v.longValue <= e.maxDoc
-    case GreaterThan("doc_id", v: java.lang.Number) => e.maxDoc > v.longValue
-    case GreaterThanOrEqual("doc_id", v: java.lang.Number) => e.maxDoc >= v.longValue
-    case LessThan("doc_id", v: java.lang.Number) => e.minDoc < v.longValue
-    case LessThanOrEqual("doc_id", v: java.lang.Number) => e.minDoc <= v.longValue
-    case _ => true
-  }
 
   override def initialOffset(): Offset = BandVersionOffset(0L)
 
@@ -816,7 +814,7 @@ class BandMicroBatchStream(path: String, conf: Configuration,
         "re-read or lose rows. Run store maintenance with the stream down.")
     endEntries
       .filterNot(en => startFiles.contains(en.name))
-      .filter(en => bandAdmitted(en.band) && docAdmitted(en))
+      .filter(pruning.admits)
       .map(en => BandFilePartition(new Path(root, en.name).toString,
         en.band, en.len): InputPartition)
       .toArray
@@ -1005,19 +1003,13 @@ private[dsv2] object BandAggregate {
   * DSv2 aggregate-pushdown contract.
   */
 class BandAggregateScan(path: String, conf: Configuration,
-                        pushed: Array[Filter], version: Option[Long],
+                        pruning: BandPruning, version: Option[Long],
                         agg: BandAggregate) extends Scan with Batch {
   import BandAggregate._
 
-  private def bandAdmitted(band: Int): Boolean = pushed.forall {
-    case EqualTo("band", v: Int) => band == v
-    case In("band", vs) => vs.contains(band)
-    case _ => true
-  }
-
   private lazy val kept =
     BandStore.readManifest(new Path(path), conf, version)
-      .filter(e => bandAdmitted(e.band))
+      .filter(pruning.admits)
 
   override def readSchema(): StructType = {
     val groupCols =
@@ -1057,7 +1049,7 @@ class BandAggregateScan(path: String, conf: Configuration,
   override def description(): String =
     s"graft-bands METADATA-ONLY aggregate path=$path " +
       s"version=${version.getOrElse("current")} " +
-      s"PushedBandFilters=${pushed.mkString("[", ",", "]")} " +
+      s"PushedBandFilters=${pruning.bands.mkString("[", ",", "]")} " +
       s"groupByBand=${agg.groupByBand} aggs=${agg.aggs.mkString(",")} " +
       s"files=${kept.size}"
 
@@ -1104,6 +1096,24 @@ class BandWriteBuilder(path: String, inputSchema: StructType, conf: Configuratio
 case class BandCommitMessage(files: Seq[BandStore.ManifestEntry])
     extends WriterCommitMessage
 
+object BandCommitMessage {
+  /** Every file the task commits of one write report. Spark hands an
+    * abort null for a task that never committed; it reports none.
+    */
+  def filesOf(messages: Array[WriterCommitMessage]): Seq[BandStore.ManifestEntry] =
+    messages.toSeq.flatMap {
+      case BandCommitMessage(files) => files
+      case _ => Nil
+    }
+
+  /** The one driver-side abort of every band write (batch, streaming,
+    * copy-on-write): delete the files its committed tasks wrote.
+    */
+  def abort(path: String, conf: Configuration,
+            messages: Array[WriterCommitMessage]): Unit =
+    BandStore.discard(new Path(path), conf, filesOf(messages).map(_.name))
+}
+
 /** Per-open-file write-side bookkeeping: the stream writer plus the
   * statistics its manifest entry will carry (row count, doc_id min/max),
   * maintained as rows flow — stats cost nothing at write time and pay at
@@ -1129,9 +1139,7 @@ class BandBatchWrite(path: String, inputSchema: StructType, overwrite: Boolean,
     new BandWriterFactory(path, inputSchema, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.toSeq.flatMap {
-      case BandCommitMessage(files) => files
-    }
+    val committed = BandCommitMessage.filesOf(messages)
     val root = new Path(path)
     val hconf = conf.value
     val (prior, epochs) = BandStore.readManifestFull(root, hconf)
@@ -1148,15 +1156,8 @@ class BandBatchWrite(path: String, inputSchema: StructType, overwrite: Boolean,
     // explicit BandStoreMaintenance.vacuum, after the retention window.
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val f = BandStore.fs(root, conf.value)
-    messages.foreach {
-      case BandCommitMessage(files) =>
-        files.foreach(e => f.delete(new Path(root, e.name), false))
-      case _ =>
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    BandCommitMessage.abort(path, conf.value, messages)
 }
 
 class BandWriterFactory(path: String, inputSchema: StructType,
@@ -1184,16 +1185,13 @@ class BandStreamingWrite(path: String, inputSchema: StructType,
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.toSeq.flatMap {
-      case BandCommitMessage(files) => files
-    }
+    val committed = BandCommitMessage.filesOf(messages)
     val root = new Path(path)
     val hconf = conf.value
     val (prior, epochs) = BandStore.readManifestFull(root, hconf)
     if (epochs.contains(epochId)) {
       // replayed epoch: the first attempt's files are live — drop ours
-      val f = BandStore.fs(root, hconf)
-      committed.foreach(e => f.delete(new Path(root, e.name), false))
+      BandStore.discard(root, hconf, committed.map(_.name))
     } else {
       BandStore.writeManifest(root, hconf, prior ++ committed,
         epochs + epochId)
@@ -1201,15 +1199,8 @@ class BandStreamingWrite(path: String, inputSchema: StructType,
   }
 
   override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val f = BandStore.fs(root, conf.value)
-    messages.foreach {
-      case BandCommitMessage(files) =>
-        files.foreach(e => f.delete(new Path(root, e.name), false))
-      case _ =>
-    }
-  }
+                     messages: Array[WriterCommitMessage]): Unit =
+    BandCommitMessage.abort(path, conf.value, messages)
 }
 
 class BandStreamingWriterFactory(path: String, inputSchema: StructType,
@@ -1221,9 +1212,45 @@ class BandStreamingWriterFactory(path: String, inputSchema: StructType,
       tag = s"e$epochId-")
 }
 
-/** Routes rows to one open file per band value seen by this task. Band
-  * cardinality is the LSH parameter B (8), so at most B small files and
-  * B open handles per task regardless of row count.
+/** Routes rows to one open file per band value seen by one task and
+  * turns the files into manifest entries: the writer of every band write
+  * ([[BandDataWriter]]) and of compaction's tasks. It takes the row's
+  * three values, not the row, so callers with `InternalRow` and `Row`
+  * share it. Band cardinality is the LSH parameter B (8), so at most B
+  * small files and B open handles per task regardless of row count.
+  */
+private[dsv2] final class BandFileRouter(root: Path, conf: Configuration,
+                                         fileName: Int => String) {
+  private val filesys = BandStore.fs(root, conf)
+  filesys.mkdirs(root)
+  private val open = mutable.Map.empty[Int, BandFileStats]
+
+  def write(band: Int, docId: Long, bkey: String): Unit =
+    open.getOrElseUpdate(band, {
+      val name = fileName(band)
+      new BandFileStats(name, new OutputStreamWriter(
+        filesys.create(new Path(root, name), false), StandardCharsets.UTF_8))
+    }).record(docId, bkey)
+
+  /** Closes every file and returns its manifest entry. */
+  def commit(): Seq[BandStore.ManifestEntry] = {
+    open.values.foreach(_.writer.close())
+    open.toSeq.map { case (band, st) =>
+      st.entry(band, filesys.getFileStatus(new Path(root, st.name)).getLen)
+    }
+  }
+
+  def abort(): Unit = {
+    close()
+    BandStore.discard(root, conf, open.values.map(_.name))
+  }
+
+  def close(): Unit =
+    open.values.foreach(v => scala.util.Try(v.writer.close()))
+}
+
+/** The DSv2 task writer of every band write: [[BandFileRouter]] over
+  * `InternalRow`s.
   */
 class BandDataWriter(path: String, inputSchema: StructType, partitionId: Int,
                      taskId: Long, conf: Configuration, tag: String = "")
@@ -1231,34 +1258,16 @@ class BandDataWriter(path: String, inputSchema: StructType, partitionId: Int,
   private val idxDoc = inputSchema.fieldIndex("doc_id")
   private val idxBand = inputSchema.fieldIndex("band")
   private val idxBkey = inputSchema.fieldIndex("bkey")
-  private val root = new Path(path)
-  private val filesys = BandStore.fs(root, conf)
-  filesys.mkdirs(root)
-  private val open = mutable.Map.empty[Int, BandFileStats]
+  private val files = new BandFileRouter(new Path(path), conf, band =>
+    s"b$band-${tag}p$partitionId-t$taskId-${UUID.randomUUID()}.gsb")
 
-  override def write(row: InternalRow): Unit = {
-    val band = row.getInt(idxBand)
-    val st = open.getOrElseUpdate(band, {
-      val name = s"b$band-${tag}p$partitionId-t$taskId-${UUID.randomUUID()}.gsb"
-      new BandFileStats(name, new OutputStreamWriter(
-        filesys.create(new Path(root, name), false), StandardCharsets.UTF_8))
-    })
-    st.record(row.getLong(idxDoc), row.getUTF8String(idxBkey).toString)
-  }
+  override def write(row: InternalRow): Unit =
+    files.write(row.getInt(idxBand), row.getLong(idxDoc),
+      row.getUTF8String(idxBkey).toString)
 
-  override def commit(): WriterCommitMessage = {
-    open.values.foreach(_.writer.close())
-    val files = open.toSeq.map { case (band, st) =>
-      st.entry(band, filesys.getFileStatus(new Path(root, st.name)).getLen)
-    }
-    BandCommitMessage(files)
-  }
+  override def commit(): WriterCommitMessage = BandCommitMessage(files.commit())
 
-  override def abort(): Unit = {
-    open.values.foreach(v => scala.util.Try(v.writer.close()))
-    open.values.foreach(v => filesys.delete(new Path(root, v.name), false))
-  }
+  override def abort(): Unit = files.abort()
 
-  override def close(): Unit =
-    open.values.foreach(v => scala.util.Try(v.writer.close()))
+  override def close(): Unit = files.close()
 }

@@ -439,7 +439,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("graft-bands DSv2 streaming SOURCE: manifest versions are offsets, " +
     "appends arrive as incremental micro-batches, rewrites refuse loudly") {
-    import graft.sources.dsv2.{BandMicroBatchStream, BandStore, BandStoreMaintenance, BandVersionOffset}
+    import graft.sources.dsv2.{BandMicroBatchStream, BandPruning, BandStore, BandStoreMaintenance, BandVersionOffset}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val out = TestSpark.tempDir("graft-dsv2-src").toString
@@ -470,7 +470,7 @@ class SourcesSpec extends AnyFunSuite {
     } finally q.stop()
     // contract level: the (1, 2] window plans ONLY version 2's new files
     val conf = spark.sessionState.newHadoopConf()
-    val ms = new BandMicroBatchStream(out, conf, Array.empty, Array.empty,
+    val ms = new BandMicroBatchStream(out, conf, BandPruning.All,
       BandStore.Schema)
     assert(ms.planInputPartitions(
       BandVersionOffset(0L), BandVersionOffset(1L)).length === 2,
@@ -712,6 +712,112 @@ class SourcesSpec extends AnyFunSuite {
     assert(m.get.group(1).toInt === 1,
       s"point predicate opened ${m.get.group(1)} files (want 1)")
     assert(df.count() === 1)
+  }
+
+  test("graft-bands pruning: batch, micro-batch and rewrite scans admit " +
+    "the same files, never drop a matching row, and the metadata count " +
+    "equals the admitted rows") {
+    import graft.sources.dsv2._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.connector.expressions.Expression
+    import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar}
+    import org.apache.spark.sql.connector.read.InputPartition
+    import org.apache.spark.sql.connector.write.RowLevelOperation.Command
+    import org.apache.spark.sql.sources._
+    import spark.implicits._
+    val out = TestSpark.tempDir("graft-dsv2-prune-agree").toString
+    (0L until 300L).flatMap(d => (0 until 4).map(b => (d, b, s"k$d-$b")))
+      .toDF("doc_id", "band", "bkey").coalesce(2)
+      .write.format("graft-bands").mode("overwrite").save(out)
+    BandStoreMaintenance.compact(spark, out, filesPerBand = 3)
+    val conf = spark.sessionState.newHadoopConf()
+    val entries = BandStore.readManifestFull(new Path(out), conf)._1
+    // (file, band, doc_id) of every stored row, read off the files
+    val rows = entries.flatMap { e =>
+      scala.io.Source.fromFile(s"$out/${e.name}").getLines()
+        .map(l => (e.name, e.band, l.takeWhile(_ != '\t').toLong)).toList
+    }
+    assert(rows.size === 1200)
+
+    def holds(f: Filter, band: Int, doc: Long): Boolean = f match {
+      case EqualTo("band", v) => v == band
+      case In("band", vs) => vs.contains(band)
+      case EqualTo("doc_id", v: Long) => doc == v
+      case GreaterThan("doc_id", v: Long) => doc > v
+      case GreaterThanOrEqual("doc_id", v: Long) => doc >= v
+      case LessThan("doc_id", v: Long) => doc < v
+      case LessThanOrEqual("doc_id", v: Long) => doc <= v
+      case other => fail(s"no row semantics for $other")
+    }
+    def names(parts: Array[InputPartition]): Set[String] =
+      parts.map(p => new Path(p.asInstanceOf[BandFilePartition].file).getName).toSet
+    val ckpt = TestSpark.tempDir("graft-dsv2-prune-agree-ckpt").toString
+    def admitted(filters: Array[Filter]): Set[String] = {
+      val b = new BandScanBuilder(out, conf)
+      b.pushFilters(filters)
+      val scan = b.build()
+      val batch = names(scan.toBatch.planInputPartitions())
+      val ms = scan.toMicroBatchStream(ckpt)
+      val stream = names(
+        ms.planInputPartitions(BandVersionOffset(0L), ms.latestOffset()))
+      val rb = new BandRewriteScanBuilder(out, conf,
+        new BandRowLevelOperation(out, Command.DELETE, conf))
+      rb.pushFilters(filters)
+      val rewrite = names(rb.build().toBatch.planInputPartitions())
+      val shown = filters.mkString(" AND ")
+      assert(stream === batch, s"micro-batch stream disagrees on $shown")
+      assert(rewrite === batch, s"rewrite scan disagrees on $shown")
+      batch
+    }
+
+    val bandSets: Seq[Array[Filter]] =
+      (0 until 4).map(b => Array[Filter](EqualTo("band", b))) ++
+        Seq(Seq(1), Seq(0, 2), Seq(1, 2, 3), Seq(0, 1, 2, 3), Seq(5))
+          .map(bs => Array[Filter](In("band", bs.toArray[Any])))
+    // each file's doc_id edges and one past them on either side
+    val edges = entries.flatMap(e => Seq(e.minDoc, e.maxDoc).flatMap(v =>
+      Seq(v - 1, v, v + 1))).distinct.sorted
+    val docFilters: Seq[Filter] = edges.flatMap(v => Seq(EqualTo("doc_id", v),
+      GreaterThan("doc_id", v), GreaterThanOrEqual("doc_id", v),
+      LessThan("doc_id", v), LessThanOrEqual("doc_id", v)))
+    val rnd = new scala.util.Random(42)
+    val combos: Seq[Array[Filter]] = bandSets ++ docFilters.map(Array(_)) ++
+      Seq.fill(80)(bandSets(rnd.nextInt(bandSets.size)) :+
+        docFilters(rnd.nextInt(docFilters.size))) ++
+      Seq.fill(40)(Array(docFilters(rnd.nextInt(docFilters.size)),
+        docFilters(rnd.nextInt(docFilters.size))))
+    var pruned = 0
+    for (filters <- combos) {
+      val kept = admitted(filters)
+      if (kept.size < entries.size) pruned += 1
+      // (a) no false drop
+      val lost = rows.filter { case (f, band, doc) =>
+        filters.forall(holds(_, band, doc)) && !kept(f)
+      }
+      assert(lost.isEmpty,
+        s"${filters.mkString(" AND ")} dropped matching rows: ${lost.take(3)}")
+    }
+    assert(pruned > combos.size / 2, s"only $pruned of ${combos.size} pruned")
+    // range-clustered files are disjoint within a band: a point predicate
+    // on one file's edge admits that file alone
+    for (e <- entries; v <- Seq(e.minDoc, e.maxDoc))
+      assert(admitted(Array(EqualTo("band", e.band), EqualTo("doc_id", v)))
+        === Set(e.name))
+
+    // (c) band filters alone: the metadata-only count(*) is the row count
+    // of the admitted files, which band filters admit exactly
+    for (filters <- bandSets) {
+      val b = new BandScanBuilder(out, conf)
+      b.pushFilters(filters)
+      assert(b.pushAggregation(new Aggregation(
+        Array[AggregateFunc](new CountStar()), Array.empty[Expression])))
+      val count = b.build().toBatch.planInputPartitions().head
+        .asInstanceOf[BandAggPartition].rows.head.getLong(0)
+      val kept = admitted(filters)
+      assert(count === rows.count(r => kept(r._1)))
+      assert(count === rows.count { case (_, band, doc) =>
+        filters.forall(holds(_, band, doc)) })
+    }
   }
 
   test("graft-bands catalog: CREATE / INSERT / SELECT / VERSION AS OF / " +
