@@ -60,8 +60,10 @@ object CurationPipeline {
     val withSplit = materialize(deduped.join(split, "doc_id"), observed("train"),
       col("split") === "train")
 
+    // the gate's n_words is each train document's token count already
     val train = withSplit.filter(col("split") === "train")
-    val packed = TextAnalysis.packSequences(train)
+    val packed = TextAnalysis.packCounts(
+        train.select(col("doc_id"), col("n_words").as("n_tokens")))
       .select(col("doc_id"), col("first_chunk").as("seq_id"))
 
     val fin = withSplit

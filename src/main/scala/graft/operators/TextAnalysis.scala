@@ -1037,12 +1037,26 @@ object TextAnalysis {
     * the bucket key. Document order within and across buckets is doc_id
     * order, so the result is bit-identical to the naive global cumsum the
     * oracle runs.
+    *
+    * Two steps: [[tokenCounts]] tokenizes each document, and
+    * [[packCounts]] packs the `(doc_id, n_tokens)` counts. A caller whose
+    * frame already carries each document's token count packs it directly.
     */
   def packSequences(docs: DataFrame, chunkTokens: Int = 512,
-                    bucketDocs: Int = 256): DataFrame = {
+                    bucketDocs: Int = 256): DataFrame =
+    packCounts(tokenCounts(docs), chunkTokens, bucketDocs)
+
+  /** Each document's token count: `(doc_id, n_tokens)`. */
+  def tokenCounts(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))
+
+  /** [[packSequences]]' packing step over `(doc_id, n_tokens)` counts;
+    * documents with no token take no place in the stream.
+    */
+  def packCounts(counts: DataFrame, chunkTokens: Int = 512,
+                 bucketDocs: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = docs.withColumn("w", tokens(col("text")))
-      .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"))
+    val t = counts.select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"))
       .filter(col("n_tokens") > 0)
       .withColumn("bucket", expr(s"doc_id DIV $bucketDocs"))
     val inBucket = Window.partitionBy("bucket").orderBy("doc_id")

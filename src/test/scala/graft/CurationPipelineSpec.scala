@@ -51,6 +51,18 @@ class CurationPipelineSpec extends AnyFunSuite {
       .count() === 0, "non-train doc was packed")
   }
 
+  test("packing the gate's n_words equals packing re-tokenized text") {
+    val docs = Tables.load(spark, TestSpark.sf0001, "documents")
+    val gated = TextAnalysis.gopherGate(docs.withColumn("w", TextAnalysis.tokens(col("text"))))
+    val fromText = TextAnalysis.packSequences(gated)
+    val fromCounts = TextAnalysis.packCounts(
+      gated.select(col("doc_id"), col("n_words").as("n_tokens")))
+    assert(fromCounts.schema === fromText.schema)
+    val rows = fromText.orderBy("doc_id").collect().toSeq
+    assert(rows.nonEmpty)
+    assert(fromCounts.orderBy("doc_id").collect().toSeq === rows)
+  }
+
   test("phrase search: adjacency is exact, overlaps count, gaps don't") {
     import graft.operators.TextAnalysis
     import spark.implicits._

@@ -2,6 +2,11 @@ package graft
 
 import graft.apps.Apps
 import graft.core.{KV, MapReduceJob, MrApp}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.spark.sql.{Dataset, GraftShims}
+import org.apache.spark.sql.functions.{col, concat_ws}
 import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -9,12 +14,35 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Differential tests mirroring the reference's methodology
-  * (src/main/test-mr.sh): the distributed engine's sorted output multiset
-  * must byte-match the sequential golden oracle
-  * (src/main/mrsequential.go:38-87, ported as MapReduceJob.sequential).
+/** Executor-side fault for the writer's retry case: the first attempt of
+  * each reduce task throws at its second reduce call, when the writer has
+  * its part file open; the retry succeeds. A task of any stage after the
+  * first one seen is a reduce task, because no reduce task starts before
+  * the map stage has ended. Valid in local mode, where the executors
+  * share this JVM.
   */
+object ReduceFault {
+  private val mapStage = new AtomicInteger(-1)
+  private val calls = new ConcurrentHashMap[Integer, AtomicInteger]()
+  val failed: java.util.Set[Integer] = ConcurrentHashMap.newKeySet[Integer]()
+
+  def reset(): Unit = { mapStage.set(-1); calls.clear(); failed.clear() }
+
+  def hook(): Unit = {
+    val ctx = TaskContext.get()
+    val p = Integer.valueOf(ctx.partitionId())
+    mapStage.compareAndSet(-1, ctx.stageId())
+    if (ctx.stageId() != mapStage.get && ctx.attemptNumber() == 0 &&
+        calls.computeIfAbsent(p, _ => new AtomicInteger()).incrementAndGet() == 2) {
+      failed.add(p)
+      throw new RuntimeException(s"injected reduce fault: partition $p")
+    }
+  }
+}
+
 class MrEngineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val files = TestSpark.corpus()
@@ -130,6 +158,103 @@ class MrEngineSpec extends AnyFunSuite {
     assert(rows < tokens.map(_.size).sum)
     assert(shuffles.size === 1)
     assert(shuffles.head.metrics("shuffleRecordsWritten").value === rows)
+  }
+
+  /** The writer `writeOutput` replaced, kept as the reference for its
+    * output: the same line frame through `write.mode("overwrite").text`.
+    */
+  def referenceWrite(result: Dataset[KV], outDir: Path): Unit =
+    result.select(concat_ws(" ", col("key"), col("value")).as("value"))
+      .write.mode("overwrite").text(outDir.toString)
+
+  private val PartName =
+    "part-(\\d{5})-([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})-c000\\.txt".r
+
+  /** The names in `out` that are not hidden (`.crc` files are). */
+  def visible(out: Path): Seq[String] =
+    Files.list(out).toArray.map(_.asInstanceOf[Path].getFileName.toString)
+      .filterNot(_.startsWith(".")).toSeq.sorted
+
+  /** Each non-empty part file's bytes, by its partition number. */
+  def partBytes(out: Path): Map[Int, Seq[Byte]] =
+    visible(out).collect { case n @ PartName(p, _) => p.toInt -> Files.readAllBytes(out.resolve(n)).toSeq }
+      .filter(_._2.nonEmpty).toMap
+
+  for (app <- Seq(Apps.WordCount, Apps.Indexer); n <- Seq(4, 10))
+    test(s"writer: ${app.name} at nReduce $n writes the reference's part files, byte for byte") {
+      val dir = TestSpark.tempDir("graft-mr-writer")
+      val job = MapReduceJob(app, nReduce = n)
+      val result = job.runOn(spark, files)
+      job.writeOutput(result, dir.resolve("got").toString)
+      referenceWrite(result, dir.resolve("ref"))
+      val got = dir.resolve("got")
+      val parts = visible(got).filter(_ != "_SUCCESS")
+      assert(visible(got).contains("_SUCCESS"))
+      assert(parts.nonEmpty && parts.size <= n)
+      parts.foreach(f => assert(PartName.matches(f), s"$f is not a part file name"))
+      assert(parts.map { case PartName(_, uuid) => uuid }.distinct.size === 1,
+        "one write's part files carry one job id")
+      assert(partBytes(got) === partBytes(dir.resolve("ref")))
+      assert(partFiles(got).values.flatten.toSeq.sorted ===
+        MapReduceJob.sequential(app, files).sorted)
+    }
+
+  test("writer: an outDir holding stale files is replaced") {
+    val out = TestSpark.tempDir("graft-mr-stale").resolve("out")
+    Files.createDirectories(out.resolve("_temporary").resolve("0"))
+    Files.write(out.resolve("part-00000-00000000-0000-0000-0000-000000000000-c000.txt"),
+      "stale 1\n".getBytes(StandardCharsets.UTF_8))
+    Files.write(out.resolve("notes.txt"), "old".getBytes(StandardCharsets.UTF_8))
+    val job = MapReduceJob(Apps.WordCount, nReduce = 4)
+    job.writeOutput(job.runOn(spark, files), out.toString)
+    assert(!visible(out).exists(f => f == "notes.txt" || f == "_temporary" || f.contains("00000000-0000")))
+    assert(partFiles(out).values.flatten.toSeq.sorted ===
+      MapReduceJob.sequential(Apps.WordCount, files).sorted)
+  }
+
+  test("writer: a result with no rows leaves _SUCCESS and no part file") {
+    val out = TestSpark.tempDir("graft-mr-empty").resolve("out")
+    Files.createDirectories(out)
+    Files.write(out.resolve("part-00001-00000000-0000-0000-0000-000000000000-c000.txt"),
+      "stale 1\n".getBytes(StandardCharsets.UTF_8))
+    val job = MapReduceJob(Apps.WordCount, nReduce = 4)
+    val result = job.runOn(spark, Seq(("f1", "123 456"), ("f2", "")))
+    assert(result.count() === 0)
+    job.writeOutput(result, out.toString)
+    assert(visible(out) === Seq("_SUCCESS"))
+  }
+
+  test("writer: a reduce attempt that throws mid-file is aborted; the retry commits NoCrash's bytes") {
+    val dir = TestSpark.tempDir("graft-mr-crash")
+    ReduceFault.reset()
+    // NoCrash's 4 keys in 2 partitions: at least one partition reduces two
+    val crash = MapReduceJob(new Apps.Crash(() => ReduceFault.hook()), nReduce = 2)
+    crash.writeOutput(crash.runOn(spark, files), dir.resolve("got").toString)
+    assert(!ReduceFault.failed.isEmpty, "no reduce attempt failed")
+    referenceWrite(MapReduceJob(Apps.NoCrash, nReduce = 2).runOn(spark, files), dir.resolve("ref"))
+    val got = dir.resolve("got")
+    assert(visible(got).contains("_SUCCESS"))
+    assert(!Files.exists(got.resolve("_temporary")))
+    assert(partBytes(got) === partBytes(dir.resolve("ref")))
+  }
+
+  test("writer: the per-task function carries the broadcast, not the Hadoop conf") {
+    val out = TestSpark.tempDir("graft-mr-guard").resolve("out")
+    val conf = Job.getInstance(GraftShims.newHadoopConf(spark)).getConfiguration
+    val confBytes = new java.io.ByteArrayOutputStream()
+    conf.write(new java.io.DataOutputStream(confBytes))
+    val committer = FileCommitProtocol.instantiate(GraftShims.fileCommitProtocolClass(spark),
+      java.util.UUID.randomUUID.toString, out.toUri.toString)
+    val shipped = GraftShims.broadcastConf(spark.sparkContext, conf)
+    try {
+      val task = new java.io.ByteArrayOutputStream()
+      val os = new java.io.ObjectOutputStream(task)
+      os.writeObject(MapReduceJob.partWriter(committer, shipped, GraftShims.jobTrackerId()))
+      os.close()
+      // the bound tells the two apart: the conf alone is far larger
+      assert(confBytes.size > 64 * 1024, s"conf is ${confBytes.size} bytes")
+      assert(task.size < 16 * 1024, s"per-task writer is ${task.size} bytes")
+    } finally shipped.destroy()
   }
 
   test("reduce receives the full materialized value list (list semantics)") {
