@@ -3,12 +3,6 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-
-  /** The file in the output dir that records a prefix-selected run's
-    * prefixes, as given.
-    */
-  val SelectionFile = "verify_prefixes.txt"
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg (local iteration only; the driver passes two):
@@ -20,13 +14,6 @@ object Verify {
     val spark = Bench.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // the selection, for tools/check.py to gate exactly the entries dumped;
-    // a full run leaves none, so a later check gates every entry
-    val selection = Paths.get(outDir, SelectionFile)
-    args.lift(2) match {
-      case Some(p) => Files.writeString(selection, p)
-      case None => Files.deleteIfExists(selection)
-    }
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -47,7 +34,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // the oracle of the selected entries only, so that tools/check.py
+    // gates exactly what this run dumped; a full run writes every entry
+    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

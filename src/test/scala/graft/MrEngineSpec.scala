@@ -43,6 +43,11 @@ object ReduceFault {
   }
 }
 
+/** Differential tests mirroring the reference's methodology
+  * (src/main/test-mr.sh): the distributed engine's sorted output multiset
+  * must byte-match the sequential golden oracle
+  * (src/main/mrsequential.go:38-87, ported as MapReduceJob.sequential).
+  */
 class MrEngineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val files = TestSpark.corpus()

@@ -8,10 +8,7 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [prefixes]
 
 The optional comma-separated [prefixes] mirrors graft.Verify's third arg:
 only queries matching a prefix are gated (the rest were deliberately not
-dumped by the filtered Verify run and are skipped, not failed). Without
-it, the prefixes a selecting Verify run recorded in <verifyOutDir>/
-verify_prefixes.txt are used; a full Verify run records none, and then
-every oracle entry is gated. A selected entry with no result still fails.
+dumped by the filtered Verify run and are skipped, not failed).
 
 --skip / --only take EXACT query names. --exclude-events points at a text
 file of event_ids (one per line) removed from the oracle's `events` view —
@@ -24,9 +21,6 @@ import sys
 from pathlib import Path
 
 import duckdb
-
-# written by graft.Verify when it was given prefixes (Verify.SelectionFile)
-SELECTION_FILE = "verify_prefixes.txt"
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -62,10 +56,6 @@ def main(sf_dir, out_dir, prefixes=None, skip=None, only=None,
         print(f"[check] events view excludes {len(ids)} dropped rows")
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
     n_pass = n_fail = 0
-    recorded = Path(out_dir) / SELECTION_FILE
-    if prefixes is None and recorded.exists():
-        prefixes = recorded.read_text().strip()
-        print(f"[check] gating the entries Verify selected: {prefixes}")
     pfx = prefixes.split(",") if prefixes else None
     for name in sorted(oracle):
         if pfx and not any(name.startswith(x) for x in pfx):
