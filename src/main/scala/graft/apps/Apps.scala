@@ -33,13 +33,16 @@ object Apps {
   }
 
   /** Inverted index (src/mrapps/indexer.go): map dedupes words per document
-    * and emits (word, file); reduce returns "<count> <doc1,doc2,...>" with
-    * the doc list sorted lexicographically and comma-joined.
+    * (first occurrence kept) and emits (word, file); reduce returns
+    * "<count> <doc1,doc2,...>" with the doc list sorted lexicographically
+    * and comma-joined.
     */
   object Indexer extends MrApp {
     val name = "indexer"
-    def map(file: String, contents: String): Seq[KV] =
-      letterTokens(contents).distinct.map(KV(_, file))
+    def map(file: String, contents: String): Seq[KV] = {
+      val seen = new java.util.HashSet[String]
+      letterTokens(contents).filter(seen.add).map(KV(_, file))
+    }
     def reduce(key: String, values: Seq[String]): String =
       s"${values.size} ${values.sorted.mkString(",")}"
   }

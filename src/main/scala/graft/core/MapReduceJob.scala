@@ -15,7 +15,8 @@ import org.apache.spark.sql.{BroadcastConf, Dataset, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import scala.collection.{immutable, mutable}
+import scala.collection.immutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Spark-native lowering of the reference's two-phase map/shuffle/reduce
@@ -27,11 +28,13 @@ import scala.util.control.NonFatal
   * Pipeline (one Spark action, one exchange, two stages):
   * {{{
   *   wholetext read                      // src/mr/worker.go:221-232 (one map task per file)
-  *     -> flatMap(app.map, group by key) // src/mr/worker.go:232-237: one (key, values) row
-  *                                       //   per distinct key of each file
+  *     -> flatMap(app.map, group by key) // src/mr/worker.go:232-237: one (key, values,
+  *                                       //   counts) row per distinct key of each file,
+  *                                       //   its values as runs of equal adjacent values
   *     -> repartition(nReduce, key)      // ihash(key) % nReduce, src/mr/worker.go:235,273-277
   *     -> sortWithinPartitions(key)      // sort.Sort(ByKey), src/mr/worker.go:181
-  *     -> adjacent-group fold(app.reduce)// src/mr/worker.go:197-212
+  *     -> adjacent-group fold(app.reduce)// src/mr/worker.go:197-212; the runs expanded
+  *                                       //   in order, so reducef gets every value
   *     -> "key value" part writer        // the reduce task writes one part file per
   *                                       //   non-empty partition and commits it, like
   *                                       //   mr-out-X (worker.go:209-216); the job's
@@ -45,7 +48,12 @@ import scala.util.control.NonFatal
   *    value the map emits reaches reducef. A map call's values cross the
   *    shuffle grouped under their key — the reference's map task likewise
   *    holds one file's output in memory before bucketing it — so the
-  *    shuffle carries one row per (file, key), not one per value.
+  *    shuffle carries one row per (file, key), not one per value. A row
+  *    holds that file's runs for the key: equal adjacent values travel as
+  *    one value and a count, and are expanded, in order, before reducef.
+  *    Only adjacent repeats merge; nothing is combined or reordered. wc's
+  *    "1"s are one run per (file, word), so its shuffle bytes follow the
+  *    distinct words, not the tokens.
   *    For production queries use the native DataFrame formulations in
   *    [[graft.SparkEntry]], which get partial aggregation, whole-stage
   *    codegen and pushdown from Catalyst.
@@ -55,8 +63,10 @@ import scala.util.control.NonFatal
   *  - The per-key value list is materialized only per group inside a
   *    streaming iterator scan of each sorted partition — Spark's
   *    UnsafeExternalSorter spills the sort by row (a row holds at most one
-  *    file's values for one key), so a partition larger than executor
-  *    memory still completes; a single giant key is the only unbounded
+  *    file's runs for one key), so a partition larger than executor
+  *    memory still completes. The reduce still materializes each key's
+  *    full, expanded value list (one array slot per value, a run's slots
+  *    sharing one `String`), so a single giant key is the only unbounded
   *    case, exactly as in the reference.
   *  - Spark's shuffle hash (Murmur3 via HashPartitioning) replaces the
   *    reference's FNV-1a. Only key co-location is observable in the final
@@ -79,29 +89,35 @@ final case class MapReduceJob(app: MrApp, nReduce: Int = 10) {
   }
 
   /** Map phase: call the user mapf once per whole file and group that
-    * call's output by key in first-seen order — one `(key, values)` row per
-    * distinct key of the file; no value is combined or dropped.
+    * call's output by key in first-seen order — one `(key, values, counts)`
+    * row per distinct key of the file. A key's values are kept in emitted
+    * order as runs of equal adjacent values: `values(i)` repeated
+    * `counts(i)` times (`a,a,b,a` is `[a, b, a]` × `[2, 1, 1]`). No value
+    * is combined, reordered or dropped; wc's one `"1"` per occurrence
+    * becomes one run per (file, word).
     */
-  def mapPhase(files: Dataset[(String, String)]): Dataset[(String, Array[String])] = {
+  def mapPhase(files: Dataset[(String, String)]): Dataset[(String, Array[String], Array[Int])] = {
     import files.sparkSession.implicits._
     val f = app
     files.flatMap { case (file, contents) =>
-      val groups = mutable.LinkedHashMap.empty[String, mutable.ArrayBuilder[String]]
+      val groups = new java.util.LinkedHashMap[String, MapReduceJob.Runs]()
       f.map(file, contents).foreach { kv =>
-        groups.getOrElseUpdate(kv.key, Array.newBuilder[String]) += kv.value
+        var runs = groups.get(kv.key)
+        if (runs == null) { runs = new MapReduceJob.Runs; groups.put(kv.key, runs) }
+        runs += kv.value
       }
-      groups.iterator.map { case (k, vs) => (k, vs.result()) }
+      groups.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.values, e.getValue.counts))
     }
   }
 
   /** Shuffle + reduce phase: co-locate by key, sort within partitions, scan
-    * each sorted partition concatenating adjacent rows' values and calling
-    * the user reducef once per key with the materialized value list — a
-    * line-for-line semantic match of the reference's reduce loop
+    * each sorted partition expanding adjacent rows' runs in order and
+    * calling the user reducef once per key with the materialized value
+    * list — a line-for-line semantic match of the reference's reduce loop
     * (src/mr/worker.go:181-212) with Spark's shuffle replacing the
-    * mr-M-R intermediate files.
+    * mr-M-R intermediate files. A run's repeats are one `String`.
     */
-  def reducePhase(mapped: Dataset[(String, Array[String])]): Dataset[KV] = {
+  def reducePhase(mapped: Dataset[(String, Array[String], Array[Int])]): Dataset[KV] = {
     import mapped.sparkSession.implicits._
     val f = app
     mapped
@@ -114,7 +130,15 @@ final case class MapReduceJob(app: MrApp, nReduce: Int = 10) {
           def next(): KV = {
             val k = buf.head._1
             val values = Array.newBuilder[String]
-            while (buf.hasNext && buf.head._1 == k) values ++= buf.next()._2
+            while (buf.hasNext && buf.head._1 == k) {
+              val (_, vs, cs) = buf.next()
+              var i = 0
+              while (i < vs.length) {
+                var c = cs(i)
+                while (c > 0) { values += vs(i); c -= 1 }
+                i += 1
+              }
+            }
             KV(k, f.reduce(k, immutable.ArraySeq.unsafeWrapArray(values.result())))
           }
         }
@@ -192,6 +216,30 @@ final case class MapReduceJob(app: MrApp, nReduce: Int = 10) {
 
 object MapReduceJob {
 
+  /** One map call's values for one key, as runs of equal adjacent values:
+    * `values(i)` occurs `counts(i)` times in a row. Null is a value.
+    */
+  private[core] final class Runs {
+    private var vs = new Array[String](4)
+    private var cs = new Array[Int](4)
+    private var n = 0
+
+    def +=(v: String): Unit =
+      if (n > 0 && vs(n - 1) == v) cs(n - 1) += 1
+      else {
+        if (n == vs.length) {
+          vs = java.util.Arrays.copyOf(vs, 2 * n)
+          cs = java.util.Arrays.copyOf(cs, 2 * n)
+        }
+        vs(n) = v
+        cs(n) = 1
+        n += 1
+      }
+
+    def values: Array[String] = java.util.Arrays.copyOf(vs, n)
+    def counts: Array[Int] = java.util.Arrays.copyOf(cs, n)
+  }
+
   /** Single-threaded golden oracle — a direct port of the reference's
     * sequential engine (src/main/mrsequential.go:38-87): map all files,
     * global sort by key, adjacent-group reduce. Returns the output lines
@@ -199,7 +247,7 @@ object MapReduceJob {
     */
   def sequential(app: MrApp, files: Seq[(String, String)]): Seq[String] = {
     val intermediate = files.flatMap { case (f, c) => app.map(f, c) }
-      .sortBy(_.key)
+      .sortBy(_.key).toIndexedSeq
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < intermediate.length) {

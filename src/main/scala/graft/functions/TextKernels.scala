@@ -22,18 +22,32 @@ object TextKernels {
     * `unicode.IsLetter` (both are Unicode general-category L*), and Java
     * regex `\p{L}`, so this equals `split(s, "[^\\p{L}]+")` with empties
     * dropped (TokenizerProp).
+    *
+    * A token is a maximal run of letters, so it is cut out of `s` with one
+    * `substring`. A char below 128 is tested as an ASCII letter, a high
+    * surrogate as the code point it starts (a lone one is not a letter),
+    * and any other char with `Character.isLetter(c)`.
     */
   def letterTokens(s: String): Array[String] = {
     val out = Array.newBuilder[String]
-    val sb = new java.lang.StringBuilder
+    val n = s.length
+    var start = -1
     var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (Character.isLetter(cp)) sb.appendCodePoint(cp)
-      else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      i += Character.charCount(cp)
+    while (i < n) {
+      val c = s.charAt(i)
+      var width = 1
+      val letter =
+        if (c < 128) (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+        else if (Character.isHighSurrogate(c)) {
+          val cp = s.codePointAt(i)
+          width = Character.charCount(cp)
+          Character.isLetter(cp)
+        } else Character.isLetter(c)
+      if (letter) { if (start < 0) start = i }
+      else if (start >= 0) { out += s.substring(start, i); start = -1 }
+      i += width
     }
-    if (sb.length > 0) out += sb.toString
+    if (start >= 0) out += s.substring(start, n)
     out.result()
   }
 

@@ -16,6 +16,7 @@ import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.{immutable, mutable}
 
 /** Executor-side fault for the writer's retry case: the first attempt of
   * each reduce task throws at its second reduce call, when the writer has
@@ -43,6 +44,22 @@ object ReduceFault {
   }
 }
 
+/** The value-order probe of the run tests: contents are space-separated
+  * "key:value" tokens, where the value "~" is null; reduce joins its
+  * values in received order, nulls as "~".
+  */
+object JoinedApp extends MrApp {
+  val name = "joined"
+  def map(f: String, c: String): Seq[KV] =
+    c.split(" ").toSeq.filter(_.nonEmpty).map { t =>
+      val i = t.indexOf(':')
+      val v = t.drop(i + 1)
+      KV(t.take(i), if (v == "~") null else v)
+    }
+  def reduce(k: String, vs: Seq[String]): String =
+    vs.map(v => if (v == null) "~" else v).mkString(",")
+}
+
 /** Differential tests mirroring the reference's methodology
   * (src/main/test-mr.sh): the distributed engine's sorted output multiset
   * must byte-match the sequential golden oracle
@@ -68,13 +85,16 @@ class MrEngineSpec extends AnyFunSuite {
   test("early_exit matches sequential oracle")(check(Apps.EarlyExit))
   test("rtiming matches sequential oracle")(check(Apps.ReduceTiming))
 
-  /** The first 8 corpus files written out as real files; returns the
-    * directory.
+  /** `text` `repeat` times over, one copy per line. */
+  def repeated(text: String, repeat: Int): String = Seq.fill(repeat)(text).mkString("\n")
+
+  /** The first 8 corpus files written out as real files, each file's
+    * text `repeat` times over; returns the directory.
     */
-  def writeCorpus(): Path = {
+  def writeCorpus(repeat: Int = 1): Path = {
     val dir = TestSpark.tempDir("graft-mr-in")
     files.take(8).foreach { case (name, contents) =>
-      Files.write(dir.resolve(name), contents.getBytes(StandardCharsets.UTF_8))
+      Files.write(dir.resolve(name), repeated(contents, repeat).getBytes(StandardCharsets.UTF_8))
     }
     dir
   }
@@ -138,7 +158,10 @@ class MrEngineSpec extends AnyFunSuite {
   }
 
   test("shuffle shape: one exchange of per-file (key, values) rows") {
-    val dir = writeCorpus()
+    // book-length files, as the reference's pg-*.txt inputs: each word
+    // recurs, so its "1"s are one run per file
+    val repeat = 100
+    val dir = writeCorpus(repeat)
     val out = TestSpark.tempDir("graft-mr-out").resolve("shape")
     val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
@@ -158,11 +181,15 @@ class MrEngineSpec extends AnyFunSuite {
         Option(plans.poll(1, java.util.concurrent.TimeUnit.SECONDS))
           .foreach(p => shuffles = exchanges(p))
     } finally spark.listenerManager.unregister(listener)
-    val tokens = files.take(8).map { case (f, c) => Apps.WordCount.map(f, c) }
+    val tokens = files.take(8).map { case (f, c) => Apps.WordCount.map(f, repeated(c, repeat)) }
     val rows = tokens.map(_.map(_.key).distinct.size).sum
-    assert(rows < tokens.map(_.size).sum)
+    val nTokens = tokens.map(_.size).sum
+    assert(rows < nTokens)
     assert(shuffles.size === 1)
     assert(shuffles.head.metrics("shuffleRecordsWritten").value === rows)
+    // one "1" per token costs bytes per token; a run costs bytes per row
+    val bytes = shuffles.head.metrics("shuffleBytesWritten").value
+    assert(bytes < nTokens, s"$bytes shuffle bytes for $nTokens tokens")
   }
 
   /** The writer `writeOutput` replaced, kept as the reference for its
@@ -296,4 +323,61 @@ class MrEngineSpec extends AnyFunSuite {
     assert(got === MapReduceJob.sequential(probe, data).sorted)
     assert(got === Seq(" e1|e2", "dup x|x|x|y", "only a"))
   }
+
+  /** The map and reduce phases before values crossed the shuffle as runs,
+    * kept as the reference for `runOn`: one `(key, values)` row per (file,
+    * key) with every value its own element, and a reduce that concatenates
+    * adjacent rows' values.
+    */
+  def referenceRunOn(app: MrApp, nReduce: Int, fs: Seq[(String, String)]): Dataset[KV] = {
+    import spark.implicits._
+    spark.createDataset(fs).flatMap { case (file, contents) =>
+      val groups = mutable.LinkedHashMap.empty[String, mutable.ArrayBuilder[String]]
+      app.map(file, contents).foreach { kv =>
+        groups.getOrElseUpdate(kv.key, Array.newBuilder[String]) += kv.value
+      }
+      groups.iterator.map { case (k, vs) => (k, vs.result()) }
+    }
+      .repartition(nReduce, col("_1"))
+      .sortWithinPartitions("_1")
+      .mapPartitions { it =>
+        new Iterator[KV] {
+          private val buf = it.buffered
+          def hasNext: Boolean = buf.hasNext
+          def next(): KV = {
+            val k = buf.head._1
+            val values = Array.newBuilder[String]
+            while (buf.hasNext && buf.head._1 == k) values ++= buf.next()._2
+            KV(k, app.reduce(k, immutable.ArraySeq.unsafeWrapArray(values.result())))
+          }
+        }
+      }
+  }
+
+  test("map phase: a key's values become runs of equal adjacent values, in emitted order") {
+    import spark.implicits._
+    val rows = MapReduceJob(JoinedApp).mapPhase(
+      spark.createDataset(Seq(("f", "a:a a:a a:b a:a n:~ n:~ k:v n:w"))))
+      .collect().map { case (k, vs, cs) => (k, vs.toSeq, cs.toSeq) }.toSeq
+    assert(rows === Seq(
+      ("a", Seq("a", "b", "a"), Seq(2, 1, 1)),
+      ("n", Seq(null, "w"), Seq(2, 1)),
+      ("k", Seq("v"), Seq(1))))
+  }
+
+  for (n <- Seq(1, 4))
+    test(s"runs: at nReduce $n reducef receives the reference's values in the reference's order") {
+      val big = Seq.fill(100000)("big:x").mkString(" ")
+      val data = Seq(
+        ("f1", "a:x a:x a:y a:x n:~ n:~ n:v n:~ solo:z e: e: e:q"),
+        ("f2", s"a:y n:~ $big a:x big:y one:w big:x"),
+        ("f3", s"$big n:~ n:~"),
+        ("f4", ""))
+      val got = MapReduceJob(JoinedApp, nReduce = n).runOn(spark, data).collect().toSeq
+      assert(got === referenceRunOn(JoinedApp, n, data).collect().toSeq)
+      val byKey = got.map(kv => kv.key -> kv.value).toMap
+      assert(byKey("solo") === "z" && byKey("one") === "w")
+      assert(byKey("big").split(",").length === 200002)
+      assert(got.map(_.key).sorted === MapReduceJob.sequential(JoinedApp, data).map(_.split(" ", 2)(0)))
+    }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.apps.Apps
-import graft.functions.FnvHash
+import graft.functions.{FnvHash, TextKernels}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties, Prop}
 import org.scalacheck.Prop.forAll
@@ -27,6 +27,45 @@ object TokenizerProp extends Properties("tokenizer") {
 
   property("letterTokens == regex [^\\p{L}]+ split") = forAll(interesting) { s =>
     Apps.letterTokens(s) == regexTokens(s)
+  }
+
+  /** The letter tokenizer before it cut tokens out with `substring`, kept
+    * as the reference: each letter code point appended to a builder.
+    */
+  def builderTokens(s: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (Character.isLetter(cp)) sb.appendCodePoint(cp)
+      else if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
+      i += Character.charCount(cp)
+    }
+    if (sb.length > 0) out += sb.toString
+    out.result()
+  }
+
+  /** The tokenizer's edges: a supplementary letter (U+1D400), lone high
+    * and low surrogates, Latin-1 letters and the non-letters either side
+    * of the ASCII letter ranges.
+    */
+  val edges: Gen[String] = {
+    val frag = Gen.oneOf("a", "Z", "\uD835\uDC00", "\uD835", "\uDC00",
+      "ª", "µ", "º", "ß", "ÿ", "@", "[", "`", "{", "_", " ", "中")
+    Gen.listOf(frag).map(_.mkString)
+  }
+
+  property("letterTokens == StringBuilder form on surrogates, Latin-1 and ASCII edges") =
+    forAll(edges) { s =>
+      TextKernels.letterTokens(s).toSeq == builderTokens(s)
+    }
+
+  property("letterTokens == StringBuilder form at a lone surrogate at either end") = Prop {
+    val cases = Seq("ab\uD835", "\uD835", "\uDC00ab", "a\uD835b", "a\uDC00b", "\uD835\uDC00\uD835",
+      "\uDC00\uD835\uDC00x", "x\uD835\uDC00", "@[`{_ªµºßÿ", "")
+    cases.forall(s => TextKernels.letterTokens(s).toSeq == builderTokens(s)) &&
+      TextKernels.letterTokens("a\uD835\uDC00b\uD835c").toSeq == Seq("a\uD835\uDC00b", "c")
   }
 
   property("tokens contain only letters and cover all letters") =
